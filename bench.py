@@ -249,7 +249,9 @@ def main() -> int:
     # work is real computation from the parquet inputs and belongs inside the
     # compared number. steady_sec keeps the old meaning for the series.
     end_to_end = round(staging_sec + first_pass_extra + steady_sec, 3)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or spark.sparkContext.defaultParallelism
+    )
     detail = {
         "metric": "total_query_wall_sec",
         "value": end_to_end,

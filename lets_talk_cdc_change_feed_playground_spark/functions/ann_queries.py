@@ -91,9 +91,11 @@ def emb_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             score = score + mx[:, :, i]
         return pd.Series(list(score))
 
-    # explicit SCALAR eval type: `from __future__ import annotations`
-    # stringifies hints on an inner function, which pandas_udf can't resolve
-    maxsim_scores = F.pandas_udf(_scores, "array<double>", F.PandasUDFType.SCALAR)
+    # unannotated on purpose: `from __future__ import annotations` stringifies
+    # hints on an inner function, which pandas_udf can't resolve; with no
+    # hints it takes the scalar eval type (the deprecated explicit
+    # PandasUDFType argument warns)
+    maxsim_scores = F.pandas_udf(_scores, "array<double>")
 
     pairs = (
         e.withColumn("__scores", maxsim_scores("v"))

@@ -41,13 +41,6 @@ BPE_VOCAB = 300  # letter-only vocabulary head the trainer fits on
 KN_D_NUM, KN_D_DEN = 3, 4  # Kneser-Ney absolute discount D = 3/4
 KN_TOPK = 30
 
-# (appId, sf_dir) -> trained merge table; the trainer is deterministic, so
-# the 8-row table is session-constant (bounded driver state, like the
-# AllPairs estimate memos) — encode calls stop re-running the trainer's
-# corpus pass.
-_BPE_MERGES: dict[tuple, list[tuple[str, str]]] = {}
-
-
 # ---------------------------------------------------------------------------
 # BPE trainer
 # ---------------------------------------------------------------------------
@@ -211,16 +204,17 @@ def docs_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions, each a full interpreted pass over the vocabulary — the
     classic guide §4.2 trade (higher-order Catalyst folds never codegen;
     a per-batch native loop beats 8 interpreted expression trees)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for _k in [k for k in _BPE_MERGES if k[0] != key[0]]:
-        _BPE_MERGES.pop(_k)
-    merges = _BPE_MERGES.get(key)
-    if merges is None:
-        merges = [
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import memo
+
+    # the trainer is deterministic, so the 8-row table is session-constant
+    merges = memo(
+        spark,
+        ("bpe_merges", sf_dir),
+        lambda: [
             (r["merge_x"], r["merge_y"])
             for r in docs_bpe_merges(spark, sf_dir).collect()
-        ]
-        _BPE_MERGES[key] = merges
+        ],
+    )
     d = _docs_t(spark, sf_dir)
     per_doc = (
         d.select("doc_id", F.explode("toks").alias("word"))

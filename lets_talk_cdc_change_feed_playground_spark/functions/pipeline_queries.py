@@ -1461,10 +1461,6 @@ LIMIT {PMI_TOPK}
 
 
 ALLPAIRS_T_NUM, ALLPAIRS_T_DEN = 1, 2  # cosine threshold t = 1/2
-_ALLPAIRS_EST: dict[tuple, int | None] = {}  # (appId, sf_dir) -> candidate estimate
-_ALLPAIRS_NDOCS: dict[tuple, int] = {}  # (appId, sf_dir) -> corpus doc count
-_ALLPAIRS_STATS: dict[tuple, int] = {}  # (appId, sf_dir) -> max per-doc norm2
-_ALLPAIRS_BC: dict[tuple, object] = {}  # (appId, sf_dir) -> posting-table broadcast
 
 
 def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1525,7 +1521,10 @@ def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(tf * (n_docs + 1)) div (df + 1)").alias("w"),
         )
     )
-    from lets_talk_cdc_change_feed_playground_spark.operators.shared import shared_df
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+        memo,
+        shared_df,
+    )
 
     # cast BEFORE multiplying: w·w in LongType silently wraps past
     # w≈3.04e9 (non-ANSI Spark) while the DuckDB oracle computes the same
@@ -1585,17 +1584,9 @@ def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     budget = int(_os.environ.get("SPARK_GRAFT_ALLPAIRS_MAX_CAND", "50000000"))
-    est_key = (spark.sparkContext.applicationId, sf_dir)
-    for _k in [k for k in _ALLPAIRS_EST if k[0] != est_key[0]]:
-        _ALLPAIRS_EST.pop(_k)  # dead-session hygiene, like shared_df
-    for _k in [k for k in _ALLPAIRS_NDOCS if k[0] != est_key[0]]:
-        _ALLPAIRS_NDOCS.pop(_k)
-    for _k in [k for k in _ALLPAIRS_STATS if k[0] != est_key[0]]:
-        _ALLPAIRS_STATS.pop(_k)
-    for _k in [k for k in _ALLPAIRS_BC if k[0] != est_key[0]]:
-        _ALLPAIRS_BC.pop(_k)
-    est = _ALLPAIRS_EST.get(est_key)
-    if est is None:
+    def estimate() -> tuple:
+        """(candidate estimate, max per-doc norm2): corpus-stable, so one
+        aggregate per session."""
         row = (
             pf.groupBy("sid")
             .agg(F.count(F.lit(1)).alias("dfp"))
@@ -1625,10 +1616,9 @@ def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "Re-shingle with a different tokenization or fall back to "
                 "string-keyed joins."
             )
-        est = row["est"]
-        _ALLPAIRS_EST[est_key] = est  # corpus-stable: one aggregate per session
-        _ALLPAIRS_STATS[est_key] = int(row["max_norm2"] or 0)
-    max_norm2 = _ALLPAIRS_STATS[est_key]
+        return row["est"], int(row["max_norm2"] or 0)
+
+    est, max_norm2 = memo(spark, ("allpairs_est", sf_dir), estimate)
     if est is not None and int(est) > budget:
         raise RuntimeError(
             f"docs_allpairs_cosine: estimated candidate pairs {int(est):,} exceed "
@@ -1690,10 +1680,8 @@ def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df-bounded, far smaller than the candidate explosion); past it they
     # are corpus-sized and pin doc-keyed shuffle hash joins — the plan that
     # survives at volume.
-    nd = _ALLPAIRS_NDOCS.get(est_key)
-    if nd is None:
-        nd = d.count()  # one count over the staged corpus, memoized per session
-        _ALLPAIRS_NDOCS[est_key] = nd
+    # one count over the staged corpus per session
+    nd = memo(spark, ("allpairs_ndocs", sf_dir), d.count)
     bcast_docs = int(_os.environ.get("SPARK_GRAFT_ALLPAIRS_BCAST_DOCS", "200000"))
     if nd <= bcast_docs:
         def build_side(side: DataFrame) -> DataFrame:
@@ -1726,11 +1714,13 @@ def docs_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bit-identical to the decimal fold.  cand is distinct and hash-
         # partitioned, so each pair folds in exactly one task; the result
         # casts to decimal once per PAIR, after the fold, like the JVM path.
-        post_bc = _ALLPAIRS_BC.get(est_key)
-        if post_bc is None:
-            post_pdf = flagged.select("doc_id", "sid", "w").toPandas()
-            post_bc = spark.sparkContext.broadcast(post_pdf)
-            _ALLPAIRS_BC[est_key] = post_bc
+        post_bc = memo(
+            spark,
+            ("allpairs_post_bc", sf_dir),
+            lambda: spark.sparkContext.broadcast(
+                flagged.select("doc_id", "sid", "w").toPandas()
+            ),
+        )
 
         def _verify_kernel(batches):
             import pandas as pd  # noqa: F401

@@ -485,8 +485,12 @@ def _win_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row-local selection into an O(positions × window × k) interpreted
     re-computation per row (measured 90 s for 500 docs).  The cache
     boundary pins each array to compute exactly once — the 100 TB analogue
-    is staging the fingerprint column to a table."""
-    from lets_talk_cdc_change_feed_playground_spark.operators.shared import shared_df
+    is staging the fingerprint column to a table.  The stage caches are
+    registry entries too, so ``clear_shared()`` releases them."""
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+        memo,
+        shared_df,
+    )
 
     P = T.FINGERPRINT_PRIME
 
@@ -495,7 +499,7 @@ def _win_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         th = d.select("doc_id", T.token_hashes(F.col("toks")).alias("th")).filter(
             F.size("th") >= WIN_K + WIN_W - 1
         )
-        th.persist()
+        memo(spark, ("win_th", sf_dir), th.persist)
         grams = th.select(
             "doc_id",
             F.expr(
@@ -504,7 +508,7 @@ def _win_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" 0L, (a, x) -> (a * 31 + x) % {P}))"
             ).alias("grams"),
         )
-        grams.persist()
+        memo(spark, ("win_grams", sf_dir), grams.persist)
         return grams.select(
             "doc_id",
             F.expr(

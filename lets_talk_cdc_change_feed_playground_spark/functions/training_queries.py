@@ -1099,10 +1099,6 @@ ORDER BY rank
 
 
 DSIR_BUCKETS = 256  # hashed-unigram feature buckets
-# session-memoized bucket→weight arrays (DSIR_BUCKETS longs each), keyed by
-# (applicationId, sf_dir) — bounded driver state, same pattern as the
-# AllPairs estimate cache
-_DSIR_WL: dict[tuple, object] = {}
 DSIR_SCALE = 10_000  # likelihood ratios reported in exact 1e-4 units
 DSIR_SEL_PCT = 0.75  # docs at/above the 75th-percentile ratio are selected
 
@@ -1136,7 +1132,10 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401 — pandas_udf Series signature
     from pyspark.sql.types import ArrayType, IntegerType
 
-    from lets_talk_cdc_change_feed_playground_spark.operators.shared import shared_df
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+        memo,
+        shared_df,
+    )
 
     def build_tb() -> DataFrame:
         # per-doc token→bucket arrays: the rolling 31-hash per token (same
@@ -1194,14 +1193,13 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster terms), exactly like the driver-held IVM dim state; memoized
     # per session beside the persisted frames so repeated calls skip the
     # counts round-trip
-    wkey = (spark.sparkContext.applicationId, sf_dir)
-    for _k in [k for k in _DSIR_WL if k[0] != wkey[0]]:
-        _DSIR_WL.pop(_k)  # dead-session hygiene, like shared_df
-    if wkey not in _DSIR_WL:
-        _DSIR_WL[wkey] = np.array(
+    wl_arr = memo(
+        spark,
+        ("dsir_weights", sf_dir),
+        lambda: np.array(
             [r["w"] for r in weights.orderBy("b").collect()], dtype=np.int64
-        )
-    wl_arr = _DSIR_WL[wkey]
+        ),
+    )
     assert len(wl_arr) == DSIR_BUCKETS
 
     @F.pandas_udf("long")

@@ -55,7 +55,11 @@ from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
     OPS_SQL,
     ops_feed,
 )
-from lets_talk_cdc_change_feed_playground_spark.operators.shared import local_df, shared_df
+from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+    local_df,
+    memo,
+    shared_df,
+)
 
 #: Maintenance-batch width (ms): 5 days -> 6 epochs over the 30-day feed.
 EPOCH_MS = 432_000_000
@@ -63,10 +67,24 @@ EPOCH_MS = 432_000_000
 #: A type is "hot" in an epoch iff its op count * HOT_DEN >= epoch total.
 HOT_DEN = 5
 
-#: session-memoized feed scalars: (t0, per-(epoch, type) op counts) —
-#: bounded by epochs x types, the exact dim state the streaming twin holds
-#: in the driver between micro-batches (streaming/stream_queries.py)
-_IVM_META: dict[tuple, tuple] = {}
+
+def ivm_meta(spark: SparkSession, sf_dir: str) -> tuple[int, list[tuple]]:
+    """Session-staged feed scalars: (t0, per-(epoch, type) op counts) —
+    bounded by epochs x types, the exact dim state the streaming twin holds
+    in the driver between micro-batches (streaming/stream_queries.py)."""
+
+    def build() -> tuple[int, list[tuple]]:
+        ops = ops_feed(spark, sf_dir)
+        t0 = ops.agg(F.min("t")).first()[0]
+        counts = (
+            ops.withColumn("epoch", F.expr(f"(t - {t0}) div {EPOCH_MS}"))
+            .groupBy("epoch", "event_type")
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        )
+        return t0, [(r["epoch"], r["event_type"], r["cnt"]) for r in counts]
+
+    return memo(spark, ("ivm_meta", sf_dir), build)
 
 
 def cdc_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,19 +108,7 @@ def cdc_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of per-term broadcast builds; the arithmetic, the oracle, and the
     result hash are unchanged."""
     ops = ops_feed(spark, sf_dir)
-    mkey = (spark.sparkContext.applicationId, sf_dir)
-    for _k in [k for k in _IVM_META if k[0] != mkey[0]]:
-        _IVM_META.pop(_k)  # dead-session hygiene, like shared_df
-    if mkey not in _IVM_META:
-        t0 = ops.agg(F.min("t")).first()[0]
-        counts = (
-            ops.withColumn("epoch", F.expr(f"(t - {t0}) div {EPOCH_MS}"))
-            .groupBy("epoch", "event_type")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        _IVM_META[mkey] = (t0, [(r["epoch"], r["event_type"], r["cnt"]) for r in counts])
-    t0, count_rows = _IVM_META[mkey]
+    t0, count_rows = ivm_meta(spark, sf_dir)
 
     # ---- dim-side delta machinery, driver arithmetic (epochs x types) ----
     epochs = sorted({e for e, _t, _c in count_rows})

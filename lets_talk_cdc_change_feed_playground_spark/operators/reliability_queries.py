@@ -55,6 +55,7 @@ from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
 from lets_talk_cdc_change_feed_playground_spark.operators.playground_queries import (
     _bus_sql,
 )
+from lets_talk_cdc_change_feed_playground_spark.operators.shared import memo, scratch_dir
 
 #: Log-compaction tombstone retention (Kafka ``delete.retention.ms`` role):
 #: a key whose latest record is a delete keeps its tombstone only while the
@@ -1032,9 +1033,6 @@ ORDER BY pk
 # NDJSON export round-trip (S7 inside the hash gate)
 # ---------------------------------------------------------------------------
 
-_ndjson_cache: dict[tuple, str] = {}
-
-
 def cdc_ndjson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 judged end-to-end: the C1 WAL is exported as NDJSON (the
     reference's event-log export, ``src/ui/eventLogExport.ts:112-182``,
@@ -1046,22 +1044,21 @@ def cdc_ndjson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the export is a distributed ``df.write.json`` (one file
     per partition, no driver funnel); re-reading is a parallel JSON scan
     with schema projection."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from lets_talk_cdc_change_feed_playground_spark.sources.scenario import (
         export_events_ndjson,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ndjson_cache:
-        path = tempfile.mkdtemp(prefix="sg_ndjson_")
+    def export() -> str:
+        path = scratch_dir(spark, "sg_ndjson_")
         wal = log_capture(spark, sf_dir).select(
             "lsn", "op", "pk", "after_event_type", "after_value", "ts_ms", "tx_id"
         )
         export_events_ndjson(wal, path)
-        _ndjson_cache[key] = path
+        return path
+
+    path = memo(spark, ("ndjson_export", sf_dir), export)
     schema = T.StructType(
         [
             T.StructField("lsn", T.LongType()),
@@ -1073,7 +1070,7 @@ def cdc_ndjson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("tx_id", T.StringType()),
         ]
     )
-    return spark.read.schema(schema).json(_ndjson_cache[key]).orderBy("lsn")
+    return spark.read.schema(schema).json(path).orderBy("lsn")
 
 
 _NDJSON_SQL = (

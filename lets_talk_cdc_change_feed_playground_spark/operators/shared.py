@@ -1,15 +1,39 @@
-"""Session-scoped materialized frames shared across judged queries.
+"""The session staging registry: every value a query stages once per session.
 
-Nearly every CDC query consumes one of a handful of intermediate frames —
-the derived ops feed, the three capture lanes, the broker bus.  Rebuilding
-them per query repeats the same scan + per-key shuffle dozens of times in a
-bench run.  Materializing each once per session is the classic shared-scan
-trade: the lane/bus frames are the same order of size as their input and are
-consumed by many downstream aggregations, so one persist amortizes across
-~20 queries.  The 100 TB analogue is staging the capture lane to a table
-once and pointing every verification/metric query at it (exactly what the
-reference's harness does with its ``received[]`` event log,
-``harness/verifier/index.js:248-285``).
+Nearly every query consumes something staged once and reused: the derived
+ops feed, the capture lanes and the broker bus (persisted frames), chunked
+stream feeds and streaming-family artifacts (directories, sinks), and
+driver-side scalars (BPE merges, AllPairs estimates, IVM epoch counts).
+Rebuilding them per query repeats the same scan and shuffle dozens of times
+in a bench run.  This module is the one place they live: the Spark twin of
+the reference harness's single ``received[]`` event log that every
+verification reads (``harness/verifier/index.js:248-285``).
+
+Contract:
+
+- ``memo(spark, key, build)`` returns the value staged for ``key`` in this
+  Spark session, calling ``build()`` on first use only.  A key names every
+  input the value depends on besides the session (``sf_dir``, chunk counts,
+  kind); a module constant left out of a key must not change while its
+  entries live (tools that rebind one call ``clear_shared()`` first).
+- Entries are scoped by ``applicationId``: the first miss in a new session
+  drops every entry of a dead one and deletes its scratch root, so a
+  process never mixes sessions.
+- ``scratch_dir(spark, prefix)`` makes a fresh directory under the
+  session's one scratch root; no query writes anywhere else.
+- ``shared_df(spark, key, builder)`` is ``memo`` of a persisted,
+  cache-anchored frame (below).
+- ``clear_shared()`` releases everything the registry holds: it unpersists
+  the frames, destroys the broadcasts and deletes the scratch root.  Frames,
+  paths and broadcasts handed out before it are invalid after it; the next
+  call for a key rebuilds.
+
+Concurrency: bench warm-ups and the streaming families stage from several
+driver threads.  One short mutex guards the dict, so a hit is one locked
+read.  A build holds only its own key's (reentrant) lock, so two threads
+asking for one key build it once while independent keys build concurrently.
+Builders may ask for other keys (upstream frames, chunk feeds); the
+dependencies form a DAG, so per-key locks cannot deadlock.
 
 Staged frames are handed to consumers as **cache-anchored** DataFrames: the
 frame is persisted as usual (compressed columnar InMemoryRelation), but the
@@ -29,50 +53,90 @@ re-shuffles reappeared; events_session_concurrency 0.9 → 4.8 s).
 
 from __future__ import annotations
 
+import atexit
 import math
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable
 
 from pyspark import StorageLevel
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
-# the as-built persisted frames (full lineage) — unpersist must run against
-# these, because the cache manager matches registered plans, not the
-# anchored InMemoryRelation leaves handed to consumers
-_ORIG: dict[tuple, DataFrame] = {}
-# bench.py submits materializing writes from a ThreadPoolExecutor; two
-# threads racing a first-touch build would double-stage the frame and leak
-# the loser.  One driver-side lock serializes build+register.  Builders are
-# plan construction only (localCheckpoint(eager=False) is lazy), so holding
-# the lock across the build is cheap; REENTRANT because builders routinely
-# call shared_df for their own upstream frames (e.g. capture lanes ->
-# ops_feed).
-_LOCK = threading.RLock()
+# (applicationId, *key) -> staged value
+_ENTRIES: dict[tuple, object] = {}
+# (applicationId, *key) -> the lock its build holds
+_BUILD_LOCKS: dict[tuple, threading.RLock] = {}
+_MUTEX = threading.Lock()
+# key of the session's scratch root directory
+_ROOT = ("scratch_root",)
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], object]) -> object:
+    """Return the value staged for ``key`` this session, building it once."""
+    app = spark.sparkContext.applicationId
+    full = (app, *key)
+    with _MUTEX:
+        if full in _ENTRIES:
+            return _ENTRIES[full]
+        dead = [(k, _ENTRIES.pop(k)) for k in [k for k in _ENTRIES if k[0] != app]]
+        for k in [k for k in _BUILD_LOCKS if k[0] != app]:
+            del _BUILD_LOCKS[k]
+        lock = _BUILD_LOCKS.setdefault(full, threading.RLock())
+    # a dead session's frames and broadcasts died with it; its files did not
+    _release(_roots(dead))
+    with lock:
+        with _MUTEX:
+            if full in _ENTRIES:
+                return _ENTRIES[full]
+        value = build()
+        with _MUTEX:
+            _ENTRIES[full] = value
+    return value
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory under this session's scratch root."""
+    root = memo(spark, _ROOT, lambda: tempfile.mkdtemp(prefix="sg_session_"))
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 def shared_df(
     spark: SparkSession, key: tuple, builder: Callable[[], DataFrame]
 ) -> DataFrame:
-    """Return the frame for ``key``, building + staging it on first use.
+    """Return the frame for ``key``, building, persisting and anchoring it
+    on first use.  The entry keeps the as-built persisted frame beside the
+    anchored one: unpersist must run against it, because the cache manager
+    matches registered plans, not the anchored InMemoryRelation leaves
+    handed to consumers."""
 
-    Keys are scoped by Spark applicationId so a fresh session (driver gate,
-    tests, bench) never sees another session's plans; entries from dead
-    sessions are dropped eagerly to keep the registry bounded.
-    """
-    app = spark.sparkContext.applicationId
-    full = (app, *key)
-    with _LOCK:
-        df = _CACHE.get(full)
-        if df is None:
-            for stale in [k for k in _CACHE if k[0] != app]:
-                _CACHE.pop(stale)
-                _ORIG.pop(stale, None)
-            built = builder().persist(StorageLevel.MEMORY_AND_DISK)
-            df = _anchor_to_cache(spark, built)
-            _CACHE[full] = df
-            _ORIG[full] = built
-    return df
+    def build() -> tuple[DataFrame, DataFrame]:
+        built = builder().persist(StorageLevel.MEMORY_AND_DISK)
+        return _anchor_to_cache(spark, built), built
+
+    return memo(spark, key, build)[0]
+
+
+def _roots(entries: list[tuple[tuple, object]]) -> list[tuple[tuple, object]]:
+    return [(k, v) for k, v in entries if k[1:] == _ROOT]
+
+
+def _release(entries: list[tuple[tuple, object]]) -> None:
+    """Free what registry entries hold: persisted frames, broadcasts and
+    the scratch root."""
+    for key, value in entries:
+        if key[1:] == _ROOT:
+            shutil.rmtree(value, ignore_errors=True)
+            continue
+        for v in value if isinstance(value, tuple) else (value,):
+            try:
+                if isinstance(v, DataFrame) and v.is_cached:
+                    v.unpersist(blocking=True)
+                elif isinstance(v, Broadcast):
+                    v.destroy()
+            except Exception:
+                pass  # session already stopped — nothing held
 
 
 def _anchor_to_cache(spark: SparkSession, built: DataFrame) -> DataFrame:
@@ -183,25 +247,17 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
 
 
 def clear_shared() -> int:
-    """Unpersist and drop every registered frame; returns the count dropped.
+    """Release every registry entry (see the module contract); returns the
+    count dropped.  A long-lived driver (notebook, service) otherwise holds
+    staged storage and scratch files until its session dies.  Call between
+    workloads (the bench and the sweep tools do after a full pass)."""
+    with _MUTEX:
+        entries = list(_ENTRIES.items())
+        _ENTRIES.clear()
+        _BUILD_LOCKS.clear()
+    _release(entries)
+    return len(entries)
 
-    A long-lived driver (notebook, service) otherwise accumulates staged
-    storage bounded only by MEMORY_AND_DISK spill: entries are evicted when
-    their *session* dies, never within one.  Call between workloads (the
-    bench/sweep tools do after a full pass) to return executor storage.
-    Subsequent ``shared_df`` calls simply rebuild on first use.
 
-    Unpersist runs against the as-built frames (``_ORIG``): the cache
-    manager matches the registered lineage plans, not the anchored
-    InMemoryRelation leaves handed to consumers."""
-    n = 0
-    with _LOCK:
-        for df in _ORIG.values():
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass  # session already gone — nothing held
-        _CACHE.clear()
-        _ORIG.clear()
-    return n
+# a driver that exits without clear_shared() still leaves no scratch files
+atexit.register(lambda: _release(_roots(list(_ENTRIES.items()))))

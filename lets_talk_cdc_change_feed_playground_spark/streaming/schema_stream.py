@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +47,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lets_talk_cdc_change_feed_playground_spark.operators.shared import local_df
+from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+    local_df,
+    memo,
+    scratch_dir,
+)
 from lets_talk_cdc_change_feed_playground_spark.operators.schema_evolution import (  # noqa: E402
     _TYPE_BOOL as _TYPE_BOOL_RE,
     _TYPE_NUM as _TYPE_NUM_RE,
@@ -361,32 +364,38 @@ class EvolvingUpsertSink:
             )
 
         def _write_group(item) -> None:
-            cols, tbls = item
+            i, (cols, tbls) = item
             if len(tbls) == 1:
                 _write_single(tbls[0], cols)
                 return
-            tmp = tempfile.mkdtemp(prefix="sg_evo_proj_")
-            state.filter(F.col("table").isin(list(tbls))).select(
-                "table",
-                "pk",
-                *[F.element_at("data", c).alias(c) for c in cols],
-                "updated_t",
-            ).write.partitionBy("table").mode("overwrite").parquet(tmp)
-            for tbl in tbls:
-                src = os.path.join(tmp, f"table={tbl}")
-                dst = os.path.join(self.path, "tables", tbl, f"v={nv}")
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                if os.path.isdir(src):
-                    os.rename(src, dst)
-                else:
-                    # a registry-known table with zero live state rows gets
-                    # no partition dir — write its (empty, schema-ful)
-                    # version the single-table way so readers still resolve
-                    _write_single(tbl, cols)
+            # staged inside the sink's own directory, so the renames below
+            # never cross a filesystem
+            tmp = os.path.join(self.path, "_staging", f"v={nv}_g{i}")
+            try:
+                state.filter(F.col("table").isin(list(tbls))).select(
+                    "table",
+                    "pk",
+                    *[F.element_at("data", c).alias(c) for c in cols],
+                    "updated_t",
+                ).write.partitionBy("table").mode("overwrite").parquet(tmp)
+                for tbl in tbls:
+                    src = os.path.join(tmp, f"table={tbl}")
+                    dst = os.path.join(self.path, "tables", tbl, f"v={nv}")
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    if os.path.isdir(dst):
+                        shutil.rmtree(dst)
+                    if os.path.isdir(src):
+                        os.rename(src, dst)
+                    else:
+                        # a registry-known table with zero live state rows
+                        # gets no partition dir — write its (empty,
+                        # schema-ful) version the single-table way so
+                        # readers still resolve
+                        _write_single(tbl, cols)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
 
-        _concurrently(_write_group, sorted(groups.items()))
+        _concurrently(_write_group, list(enumerate(sorted(groups.items()))))
 
     def finalize_tables(self) -> None:
         """Refresh every table's wide projection from the final state — one
@@ -451,40 +460,26 @@ from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (  # no
     STREAM_PARTS as _STREAM_PARTS,
 )
 
-_staged: dict[tuple, str] = {}
-# local twin of stream_queries._STAGED_LOCK (module-level import would be
-# circular): family runners may stage from worker threads
-import threading as _threading  # noqa: E402
-
-_STAGED_LOCK = _threading.RLock()
-
 
 def _evolving_chunks(spark: SparkSession, sf_dir: str) -> str:
     """Stage the evolving ops feed as time-split chunk files with strictly
     increasing synthetic mtimes (FileStreamSource delivery order is mtime)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "schema_evo")
-    with _STAGED_LOCK:
-        return _evolving_chunks_locked(spark, sf_dir, key)
-
-
-def _evolving_chunks_locked(spark: SparkSession, sf_dir: str, key: tuple) -> str:
-    if key in _staged:
-        return _staged[key]
     # chunk-count knob shared with the other judged streams so the
     # batching-invariance fuzz varies every staged feed in one place
     from lets_talk_cdc_change_feed_playground_spark.streaming import (
         stream_queries as _sq,
     )
 
-    ops = evolving_ops(spark, sf_dir)
-    cuts = ops.approxQuantile("t", _sq._split_qs(), 0.001)
-    flat = _sq._write_split_chunks(
-        ops.withColumn("__chunk", _sq._chunk_id(F.col("t"), cuts)),
-        _sq._N_CHUNKS,
-        "sg_schema_evo_",
-    )
-    _staged[key] = flat
-    return flat
+    def build() -> str:
+        ops = evolving_ops(spark, sf_dir)
+        cuts = ops.approxQuantile("t", _sq._split_qs(), 0.001)
+        return _sq._write_split_chunks(
+            ops.withColumn("__chunk", _sq._chunk_id(F.col("t"), cuts)),
+            _sq._N_CHUNKS,
+            "sg_schema_evo_",
+        )
+
+    return memo(spark, ("schema_evo_chunks", sf_dir, _sq._N_CHUNKS), build)
 
 
 def run_ops_stream(
@@ -501,7 +496,7 @@ def run_ops_stream(
     a read surface nothing consumes.  The mid-stream ALTER writes (the
     actual schema-gain moments) are unaffected."""
     registry = SchemaRegistry()
-    sink = EvolvingUpsertSink(spark, tempfile.mkdtemp(prefix="sg_evo_sink_"), registry)
+    sink = EvolvingUpsertSink(spark, scratch_dir(spark, "sg_evo_sink_"), registry)
 
     def handle(bdf: DataFrame, bid: int) -> None:
         bdf.persist()
@@ -520,7 +515,7 @@ def run_ops_stream(
         .option("maxFilesPerTrigger", _sq._mfpt())
         .parquet(flat_dir)
     )
-    ckpt = tempfile.mkdtemp(prefix="sg_evo_ckpt_")
+    ckpt = scratch_dir(spark, "sg_evo_ckpt_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_PARTS))
     try:

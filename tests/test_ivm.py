@@ -99,8 +99,7 @@ def test_stream_ivm_redelivered_epoch_is_noop(spark, sf_dir):
     )
 
     clean = SQ.stream_ivm_join(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir, "ivm")
-    flat = SQ._staged[key]
+    flat = SQ._ivm_chunks(spark, sf_dir)
     first = sorted(f for f in os.listdir(flat) if f.endswith(".parquet"))[0]
     dup = os.path.join(flat, "zz_redelivered.parquet")
     shutil.copy(os.path.join(flat, first), dup)

@@ -68,9 +68,12 @@ def test_bpe_encode_single_kernel_and_memoized_trainer(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
     assert "BatchEvalPython" not in plan
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in L._BPE_MERGES
-    assert len(L._BPE_MERGES[key]) == L.BPE_ROUNDS
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import memo
+
+    def retrain():
+        raise AssertionError("encode did not stage the trained merge table")
+
+    assert len(memo(spark, ("bpe_merges", sf_dir), retrain)) == L.BPE_ROUNDS
 
 
 def test_ccnet_buckets_tile_each_language(spark):

@@ -51,6 +51,8 @@ def main() -> int:
     )
     from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
         clear_shared,
+        memo,
+        shared_df,
     )
 
     spark = get_spark("allpairs-threshold-sweep")
@@ -59,10 +61,9 @@ def main() -> int:
     sweep: dict[str, dict] = {}
     for num, den in THRESHOLDS:
         t_label = f"t={num}/{den}"
-        # the flagged frame's prefix marks and the estimate cache are keyed
-        # by corpus only — flush both between thresholds
+        # the flagged frame's prefix marks and the estimate are keyed by
+        # corpus only — flush the registry between thresholds
         P.ALLPAIRS_T_NUM, P.ALLPAIRS_T_DEN = num, den
-        P._ALLPAIRS_EST.clear()
         clear_shared()
         pts: dict[str, dict] = {}
         for label, mult in SCALES:
@@ -76,16 +77,12 @@ def main() -> int:
             t0 = time.perf_counter()
             P.docs_allpairs_cosine(spark, sf_dir).count()
             warm = time.perf_counter() - t0
-            est_key = (spark.sparkContext.applicationId, sf_dir)
-            est = int(P._ALLPAIRS_EST[est_key])
-            # realized distinct candidates from the cached flagged frame
-            from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
-                shared_df,
-            )
 
             def _missing():
-                raise RuntimeError("allpairs_flagged not cached")
+                raise RuntimeError(f"docs_allpairs_cosine staged nothing for {sf_dir}")
 
+            est = int(memo(spark, ("allpairs_est", sf_dir), _missing)[0])
+            # realized distinct candidates from the cached flagged frame
             flagged = shared_df(spark, ("allpairs_flagged", sf_dir), _missing)
             full = flagged.select("doc_id", "shingle")
             pf = flagged.filter(F.col("in_prefix")).select("doc_id", "shingle")
@@ -134,7 +131,6 @@ def main() -> int:
 
     # restore the judged default before anything else touches the module
     P.ALLPAIRS_T_NUM, P.ALLPAIRS_T_DEN = 1, 2
-    P._ALLPAIRS_EST.clear()
     clear_shared()
 
     merged: dict = {}

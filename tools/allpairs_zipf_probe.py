@@ -53,6 +53,10 @@ def main() -> int:
     from lets_talk_cdc_change_feed_playground_spark.functions import (
         pipeline_queries as P,
     )
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+        memo,
+        shared_df,
+    )
 
     spark = get_spark("zipf-probe")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -63,9 +67,6 @@ def main() -> int:
         if not os.path.isdir(sf_dir):
             print(f"# skip {label}: {sf_dir} missing", file=sys.stderr)
             continue
-        # candidate estimate: same aggregate as the budget guard (cached by
-        # the query itself afterwards — seed the cache so runs don't re-pay)
-        est_key = (spark.sparkContext.applicationId, sf_dir)
         t0 = time.perf_counter()
         df = P.docs_allpairs_cosine(spark, sf_dir)
         pairs = df.count()
@@ -73,26 +74,16 @@ def main() -> int:
         t0 = time.perf_counter()
         P.docs_allpairs_cosine(spark, sf_dir).count()
         warm = time.perf_counter() - t0
-        if est_key not in P._ALLPAIRS_EST:
-            raise RuntimeError(
-                "docs_allpairs_cosine did not seed its estimate cache for "
-                f"{sf_dir} — the budget guard's error path returned early; "
-                "run the query standalone to see its failure"
-            )
-        est = int(P._ALLPAIRS_EST[est_key])
-        # realized distinct candidates: reuse the flagged-shingle frame the
-        # query itself cached (explicit failure if the cache key drifted —
-        # a None builder would otherwise die on None.persist())
-        from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
-            shared_df,
-        )
 
-        def _missing() -> "DataFrame":
+        def _missing():
             raise RuntimeError(
-                "allpairs_flagged frame not cached — docs_allpairs_cosine "
-                f"must run first in this session for {sf_dir}"
+                f"docs_allpairs_cosine staged nothing for {sf_dir} — run the "
+                "query standalone to see its failure"
             )
 
+        # candidate estimate: the budget guard's aggregate, staged by the
+        # query; realized distinct candidates reuse its flagged-shingle frame
+        est = int(memo(spark, ("allpairs_est", sf_dir), _missing)[0])
         flagged = shared_df(spark, ("allpairs_flagged", sf_dir), _missing)
         full = flagged.select("doc_id", "shingle")
         pf = flagged.filter(F.col("in_prefix")).select("doc_id", "shingle")
