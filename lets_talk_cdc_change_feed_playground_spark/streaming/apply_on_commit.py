@@ -14,7 +14,8 @@ Pipeline shape:
    the watermark has passed its window end** — the floor barrier, enforced by
    the engine's state store;
 3. the sink applies released transactions ordered by ``(commit_ts, lsn)``
-   (``applyReadyTransactions``'s sort) — a per-batch sort in ``foreachBatch``.
+   (``applyReadyTransactions``'s sort) — distributed, as a keyed MERGE per
+   micro-batch (``stream_queries._CommitStoreSink``).
 
 Divergence from the reference (documented in SURVEY §2.8): the floor
 advances with watermark granularity (per micro-batch, driven by observed
@@ -74,35 +75,3 @@ def gate_on_commit_floor(
         .select("tx_id", "commit_ts", "lsn_min", "events", "n_events")
     )
 
-
-class OrderedApplySink:
-    """``foreachBatch`` target: apply released transactions in
-    ``(commit_ts, lsn)`` order, recording the apply sequence.
-
-    Test/demo sink: it collects each micro-batch (already reduced to
-    watermark-released transactions) to assert ordering. A production sink
-    applies the same batch distributed — ``apply.merge_batch`` /
-    ``UpsertSink`` is that path; the released-txn frame is partitionable by
-    pk because per-key apply order equals (commit_ts, lsn) order."""
-
-    def __init__(self):
-        self.applied: list[dict] = []
-        self.tables: dict[str, dict] = {}
-        self._batches: int = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.orderBy("commit_ts", "lsn_min").collect()
-        self._batches += 1
-        for tx in rows:
-            for ev in sorted(tx["events"], key=lambda e: e["tx_index"]):
-                if ev["op"] == "delete":
-                    self.tables.pop(ev["pk"], None)
-                else:
-                    self.tables[ev["pk"]] = ev["payload"]
-            self.applied.append(
-                {
-                    "tx_id": tx["tx_id"],
-                    "commit_ts": tx["commit_ts"],
-                    "batch": self._batches,
-                }
-            )

@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import os
 import re
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,13 +48,13 @@ from pyspark.sql.types import (
 
 from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
     local_df,
-    memo,
     scratch_dir,
 )
 from lets_talk_cdc_change_feed_playground_spark.operators.schema_evolution import (  # noqa: E402
     _TYPE_BOOL as _TYPE_BOOL_RE,
     _TYPE_NUM as _TYPE_NUM_RE,
 )
+from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import stream_session
 
 #: storage.ts:35-43 value-shape type inference — Python twin of
 #: operators/schema_evolution.infer_type, compiled from the SAME regex
@@ -456,32 +455,6 @@ def evolving_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (  # noqa: E402
-    STREAM_PARTS as _STREAM_PARTS,
-)
-
-
-def _evolving_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the evolving ops feed as time-split chunk files with strictly
-    increasing synthetic mtimes (FileStreamSource delivery order is mtime)."""
-    # chunk-count knob shared with the other judged streams so the
-    # batching-invariance fuzz varies every staged feed in one place
-    from lets_talk_cdc_change_feed_playground_spark.streaming import (
-        stream_queries as _sq,
-    )
-
-    def build() -> str:
-        ops = evolving_ops(spark, sf_dir)
-        cuts = ops.approxQuantile("t", _sq._split_qs(), 0.001)
-        return _sq._write_split_chunks(
-            ops.withColumn("__chunk", _sq._chunk_id(F.col("t"), cuts)),
-            _sq._N_CHUNKS,
-            "sg_schema_evo_",
-        )
-
-    return memo(spark, ("schema_evo_chunks", sf_dir, _sq._N_CHUNKS), build)
-
-
 def run_ops_stream(
     spark: SparkSession, flat_dir: str, finalize: bool = True
 ) -> tuple[SchemaRegistry, EvolvingUpsertSink]:
@@ -496,7 +469,9 @@ def run_ops_stream(
     a read surface nothing consumes.  The mid-stream ALTER writes (the
     actual schema-gain moments) are unaffected."""
     registry = SchemaRegistry()
-    sink = EvolvingUpsertSink(spark, scratch_dir(spark, "sg_evo_sink_"), registry)
+    sink = EvolvingUpsertSink(
+        stream_session(spark), scratch_dir(spark, "sg_evo_sink_"), registry
+    )
 
     def handle(bdf: DataFrame, bid: int) -> None:
         bdf.persist()
@@ -510,28 +485,18 @@ def run_ops_stream(
         stream_queries as _sq,
     )
 
-    src = (
-        spark.readStream.schema(OPS_SCHEMA)
-        .option("maxFilesPerTrigger", _sq._mfpt())
-        .parquet(flat_dir)
+    src = _sq._read_chunks(spark, OPS_SCHEMA, flat_dir, _sq._MAX_FILES_PER_TRIGGER)
+    q = (
+        src.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", scratch_dir(spark, "sg_evo_ckpt_"))
+        .start()
     )
-    ckpt = scratch_dir(spark, "sg_evo_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_PARTS))
     try:
-        q = (
-            src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        if finalize:
-            sink.finalize_tables()
+        q.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q.stop()
+    if finalize:
+        sink.finalize_tables()
     return registry, sink
 
 
@@ -540,7 +505,11 @@ def run_schema_evolution_stream(
 ) -> tuple[SchemaRegistry, EvolvingUpsertSink]:
     """The judged pipeline: stage the evolving ops feed, run the live loop
     (no final projection refresh — the judged output reads state+registry)."""
-    return run_ops_stream(spark, _evolving_chunks(spark, sf_dir), finalize=False)
+    from lets_talk_cdc_change_feed_playground_spark.streaming import (
+        stream_queries as _sq,
+    )
+
+    return run_ops_stream(spark, _sq._evolving_chunks(spark, sf_dir), finalize=False)
 
 
 def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,3 +36,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def cached():
+    """``cached(df)`` caches ``df`` for one test and unpersists it when the
+    test ends, pass or fail.  A frame whose plan is cached already (a
+    registry frame, ``operators/shared.py``) is left as it is: unpersisting
+    it would drop the registry's cache entry."""
+    frames = []
+
+    def cache(df):
+        level = df.storageLevel
+        if not (level.useMemory or level.useDisk):
+            frames.append(df.cache())
+        return df
+
+    yield cache
+    for df in frames:
+        df.unpersist()

@@ -26,20 +26,22 @@ from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
 )
 
 
+# the feed and the lanes are registry frames (operators/shared.py), cached
+# once per session already: caching them again would hold a second copy
 @pytest.fixture(scope="module")
 def ops(spark, sf_dir):
-    return ops_feed(spark, sf_dir).cache()
+    return ops_feed(spark, sf_dir)
 
 
 @pytest.fixture(scope="module")
 def lanes(spark, sf_dir):
     return {
-        "log": capture.log_capture(spark, sf_dir).cache(),
-        "polling": capture.polling_capture(spark, sf_dir).cache(),
+        "log": capture.log_capture(spark, sf_dir),
+        "polling": capture.polling_capture(spark, sf_dir),
         "polling_soft": capture.polling_capture(
             spark, sf_dir, include_soft_deletes=True
-        ).cache(),
-        "trigger": capture.trigger_capture(spark, sf_dir).cache(),
+        ),
+        "trigger": capture.trigger_capture(spark, sf_dir),
     }
 
 
@@ -179,7 +181,7 @@ def test_incremental_agg_converges(spark, sf_dir):
     assert rows and all(r["converged"] for r in rows)
 
 
-def test_scd2_intervals_tile(spark, sf_dir, ops):
+def test_scd2_intervals_tile(spark, sf_dir, ops, cached):
     """SCD2: per key the version chain is dense from 1, intervals are
     half-open and non-overlapping (valid_to = next valid_from), and exactly
     the keys alive at the end carry an open current version."""
@@ -187,7 +189,7 @@ def test_scd2_intervals_tile(spark, sf_dir, ops):
         cdc_scd2_history,
     )
 
-    hist = cdc_scd2_history(spark, sf_dir).cache()
+    hist = cached(cdc_scd2_history(spark, sf_dir))
     # versions dense per pk
     bad_chain = (
         hist.groupBy("pk")

@@ -50,22 +50,22 @@ def _cached_rdds(spark) -> set[int]:
 
 @pytest.mark.clears_registry
 def test_clear_shared_releases_everything_and_rebuilds(spark, sf_dir):
-    """Frames other tests cached themselves stay cached, so the storage
-    check is that each ``clear_shared()`` returns storage to the same set
-    (empty when this test runs alone)."""
+    """Storage is empty after each ``clear_shared()``: the registry holds
+    every frame the engine caches, and tests release their own.  It runs
+    after every other test, so in the full suite this checks the whole
+    run."""
     first = _hashes(spark, sf_dir)
     root = os.path.dirname(scratch_dir(spark, "sg_probe_"))
-    staged = _cached_rdds(spark)
+    assert _cached_rdds(spark)
 
     assert clear_shared() > 0
     assert not os.path.exists(root)
-    released = _cached_rdds(spark)
-    assert released < staged
+    assert _cached_rdds(spark) == set()
 
     assert _hashes(spark, sf_dir) == first
-    assert _cached_rdds(spark) > released
+    assert _cached_rdds(spark)
     clear_shared()
-    assert _cached_rdds(spark) == released
+    assert _cached_rdds(spark) == set()
 
 
 def test_memo_builds_each_key_once_under_contention(spark):

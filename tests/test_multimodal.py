@@ -10,7 +10,9 @@ from lets_talk_cdc_change_feed_playground_spark.functions import multimodal as M
 
 @pytest.fixture(scope="module")
 def media(spark):
-    return MM.synthetic_media(spark, 48).cache()
+    media = MM.synthetic_media(spark, 48).cache()
+    yield media
+    media.unpersist()
 
 
 def test_media_schema_and_determinism(spark, media):
@@ -24,8 +26,8 @@ def test_media_schema_and_determinism(spark, media):
     assert kinds == {"image", "audio", "video"}
 
 
-def test_feature_extraction(media):
-    feats = MM.extract_features(media).cache()
+def test_feature_extraction(media, cached):
+    feats = cached(MM.extract_features(media))
     assert feats.count() == 48
     assert feats.schema == MM.FEATURES_SCHEMA
     row = feats.orderBy("media_id").first()
@@ -37,8 +39,8 @@ def test_feature_extraction(media):
     assert again["features"] == row["features"]
 
 
-def test_frame_sampling_one_to_many(media):
-    frames = MM.sample_frames(media, every_ms=400).cache()
+def test_frame_sampling_one_to_many(media, cached):
+    frames = cached(MM.sample_frames(media, every_ms=400))
     n_videos = media.filter(F.col("kind") == "video").count()
     assert frames.select("media_id").distinct().count() == n_videos
     per = frames.groupBy("media_id").count()
@@ -61,8 +63,8 @@ def test_media_stats_no_udf(media):
     assert "ArrowEvalPython" not in plan.split("mapInPandas")[0].split("MapInPandas")[0]
 
 
-def test_resize_aspect_fit(media):
-    resized = MM.resize_media(media).cache()
+def test_resize_aspect_fit(media, cached):
+    resized = cached(MM.resize_media(media))
     rows = resized.collect()
     # audio rows never reach the kernel (JVM-side visual filter)
     n_visual = media.filter(F.col("meta.width").isNotNull()).count()

@@ -44,24 +44,24 @@ def test_exact_dedup_keeper_invariants(spark, sf_dir):
     ).count() == 0
 
 
-def test_minhash_dedup_linear_output(spark, sf_dir):
-    d = PQ.docs_minhash_dedup(spark, sf_dir).cache()
+def test_minhash_dedup_linear_output(spark, sf_dir, cached):
+    d = cached(PQ.docs_minhash_dedup(spark, sf_dir))
     n_docs = PQ._docs_t(spark, sf_dir).count()
     assert d.count() == n_docs  # one decision row per doc
     assert d.filter(F.col("keeper_doc_id") > F.col("doc_id")).count() == 0
     assert d.filter(F.col("is_near_duplicate")).count() > 0  # corpus has near-dups
 
 
-def test_simhash_nn_invariants(spark, sf_dir):
-    d = PQ.docs_simhash_pairs(spark, sf_dir).cache()
+def test_simhash_nn_invariants(spark, sf_dir, cached):
+    d = cached(PQ.docs_simhash_pairs(spark, sf_dir))
     assert d.count() > 0
     assert d.filter(F.col("hamming") > PQ.SIMHASH_MAX_HAMMING).count() == 0
     assert d.filter(F.col("doc_id") == F.col("nn_doc_id")).count() == 0
     assert d.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
 
 
-def test_topk_similarity_shape(spark, sf_dir):
-    d = PQ.emb_topk_similarity(spark, sf_dir).cache()
+def test_topk_similarity_shape(spark, sf_dir, cached):
+    d = cached(PQ.emb_topk_similarity(spark, sf_dir))
     assert d.count() == PQ.TOPK_QUERIES * PQ.TOPK
     assert d.filter((F.col("cosine") > 1.0001) | (F.col("cosine") < -1.0001)).count() == 0
     # descending within each query
@@ -76,10 +76,10 @@ def test_topk_similarity_shape(spark, sf_dir):
     assert bad == 0
 
 
-def test_ivf_topk_recall_vs_exact(spark, sf_dir):
+def test_ivf_topk_recall_vs_exact(spark, sf_dir, cached):
     """IVF output is well-formed and its neighbors recall a decent share of
     the exact brute-force top-k (nprobe=4 of 16 cells)."""
-    ivf = PQ.emb_ivf_topk(spark, sf_dir).cache()
+    ivf = cached(PQ.emb_ivf_topk(spark, sf_dir))
     assert ivf.count() <= PQ.TOPK_QUERIES * PQ.TOPK
     assert ivf.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
     exact = PQ.emb_topk_similarity(spark, sf_dir).select("query_id", "neighbor_id")
@@ -103,8 +103,8 @@ def test_shared_frames_are_reused(spark, sf_dir):
     assert a is b  # same materialized frame, not a rebuilt plan
 
 
-def test_text_stats_ranges(spark, sf_dir):
-    d = PQ.docs_text_stats(spark, sf_dir).cache()
+def test_text_stats_ranges(spark, sf_dir, cached):
+    d = cached(PQ.docs_text_stats(spark, sf_dir))
     assert d.filter(F.col("n_tokens") <= 0).count() == 0
     for c in ("ttr", "stopword_ratio"):
         assert d.filter((F.col(c) < 0) | (F.col(c) > 1)).count() == 0, c
@@ -118,14 +118,14 @@ def test_langid_covers_corpus(spark, sf_dir):
     assert total == PQ._docs_t(spark, sf_dir).count()
 
 
-def test_kernels_match_catalyst_twins(spark, sf_dir):
+def test_kernels_match_catalyst_twins(spark, sf_dir, cached):
     """The Arrow fast kernels must produce exactly the values of their
     Catalyst textops twins (the oracle contract rides on this)."""
     from lets_talk_cdc_change_feed_playground_spark.functions import text_kernels as K
 
-    d = PQ._docs_t(spark, sf_dir).limit(50).withColumn(
-        "th", T.token_hashes(F.col("toks"))
-    ).cache()
+    d = cached(
+        PQ._docs_t(spark, sf_dir).limit(50).withColumn("th", T.token_hashes(F.col("toks")))
+    )
     # token hashes
     rows = d.select(
         "th", K.token_hashes_kernel(F.col("norm")).alias("kh")
@@ -165,7 +165,7 @@ def test_kmeans_cells_partition_corpus(spark, sf_dir):
     assert all(r["mean_dist2"] >= 0 for r in rows)
 
 
-def test_ngram_chunk_kernels_match_catalyst(spark, sf_dir):
+def test_ngram_chunk_kernels_match_catalyst(spark, sf_dir, cached):
     """The chunk/contamination fingerprint kernels equal the Catalyst
     `_ngram_fold` slices value-for-value (the oracle contract)."""
     from lets_talk_cdc_change_feed_playground_spark.functions import text_kernels as K
@@ -175,9 +175,9 @@ def test_ngram_chunk_kernels_match_catalyst(spark, sf_dir):
         _ngram_fold,
     )
 
-    d = PQ._docs_t(spark, sf_dir).limit(50).withColumn(
-        "th", T.token_hashes(F.col("toks"))
-    ).cache()
+    d = cached(
+        PQ._docs_t(spark, sf_dir).limit(50).withColumn("th", T.token_hashes(F.col("toks")))
+    )
     k = F.floor(F.size("th") / CHUNK_TOKENS).cast("long")
     cat = d.select(
         "doc_id",

@@ -11,14 +11,16 @@ from pyspark.sql import functions as F
 from lets_talk_cdc_change_feed_playground_spark.operators import playground as pg
 
 
+# both buses are registry frames (operators/shared.py), cached once per
+# session already: caching them again would hold a second copy
 @pytest.fixture(scope="module")
 def bus(spark, sf_dir):
-    return pg.bus_feed(spark, sf_dir).cache()
+    return pg.bus_feed(spark, sf_dir)
 
 
 @pytest.fixture(scope="module")
 def bus_nodrop(spark, sf_dir):
-    return pg.bus_feed(spark, sf_dir, drop_p=0.0).cache()
+    return pg.bus_feed(spark, sf_dir, drop_p=0.0)
 
 
 def test_same_key_same_partition(bus):
@@ -52,10 +54,10 @@ def test_drop_rate_plausible(bus):
     assert abs(dropped / n - pg.DROP_P) < 0.03
 
 
-def test_apply_on_commit_drop_free(bus_nodrop):
+def test_apply_on_commit_drop_free(bus_nodrop, cached):
     """A3 with no faults: every txn completes and applies; apply ticks are
     non-decreasing in (commit_ts, lsn) order and never precede completion."""
-    led = pg.txn_ledger(bus_nodrop).cache()
+    led = cached(pg.txn_ledger(bus_nodrop))
     assert led.filter(~F.col("applied")).count() == 0
     assert led.filter(F.col("apply_tick") < F.col("complete_tick")).count() == 0
     w = W.orderBy("commit_ts", "txn_id")
@@ -67,10 +69,10 @@ def test_apply_on_commit_drop_free(bus_nodrop):
     assert regress == 0
 
 
-def test_apply_on_commit_floor_blocks(bus):
+def test_apply_on_commit_floor_blocks(bus, cached):
     """A3 with drops: a dropped event blocks its txn forever, and the commit
     floor blocks every later-committing txn behind the first incomplete one."""
-    led = pg.txn_ledger(bus).cache()
+    led = cached(pg.txn_ledger(bus))
     incomplete = led.filter(F.col("complete_tick").isNull())
     assert incomplete.count() > 0
     floor_ts = incomplete.agg(F.min("commit_ts")).first()[0]
@@ -78,18 +80,18 @@ def test_apply_on_commit_floor_blocks(bus):
     assert led.filter((F.col("n_dropped") > 0) & F.col("applied")).count() == 0
 
 
-def test_atomicity_torn_transactions(bus):
+def test_atomicity_torn_transactions(bus, cached):
     """A4 tears multi-event txns across ticks under drift; A3 never applies a
     torn txn partially (applied txns are complete by definition)."""
-    chk = pg.atomicity_check(bus, pg.txn_ledger(bus)).cache()
+    chk = cached(pg.atomicity_check(bus, pg.txn_ledger(bus)))
     assert chk.filter(F.col("torn_as_polled")).count() > 0
     assert chk.filter(F.col("applied_on_commit") & (F.col("n_dropped") > 0)).count() == 0
 
 
-def test_consumer_timeline_monotone(bus_nodrop):
+def test_consumer_timeline_monotone(bus_nodrop, cached):
     """M7: delivered/applied are non-decreasing, backlog is non-negative and
     ends at zero in a drop-free run."""
-    tl = pg.consumer_timeline(bus_nodrop, pg.txn_ledger(bus_nodrop)).cache()
+    tl = cached(pg.consumer_timeline(bus_nodrop, pg.txn_ledger(bus_nodrop)))
     assert tl.filter(F.col("backlog") < 0).count() == 0
     last = tl.orderBy(F.desc("tick_ms")).first()
     assert last["backlog"] == 0 and last["delivered"] == last["applied"]
@@ -111,10 +113,10 @@ def test_offset_dedup_exactly_once(bus):
         assert r["received"] - r["duplicates_dropped"] == r["distinct_offsets"]
 
 
-def test_rate_limited_consume(bus):
+def test_rate_limited_consume(bus, cached):
     """A6: at most per_tick events consumed per (partition, tick); consume
     never precedes delivery; FIFO order preserved within a partition."""
-    rl = pg.rate_limited_consume(bus, per_tick=8).cache()
+    rl = cached(pg.rate_limited_consume(bus, per_tick=8))
     over = (
         rl.groupBy("partition", "consume_tick").count().filter(F.col("count") > 8).count()
     )

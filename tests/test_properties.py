@@ -93,12 +93,19 @@ def _build_ops(spark, raw):
 def test_capture_engine_invariants(raw):
     spark = _get_spark()
     ops = _build_ops(spark, raw).cache()
-    n_ops = ops.count()
-    n_del = ops.filter(F.col("op") == "delete").count()
-
     log = capture.log_capture_ops(ops).cache()
     trig = capture.trigger_capture_ops(ops).cache()
     poll = capture.polling_capture_ops(ops, include_soft_deletes=True).cache()
+    try:
+        _assert_invariants(ops, log, trig, poll)
+    finally:
+        for df in (ops, log, trig, poll):
+            df.unpersist()
+
+
+def _assert_invariants(ops, log, trig, poll):
+    n_ops = ops.count()
+    n_del = ops.filter(F.col("op") == "delete").count()
 
     # completeness + dense ordered LSNs
     assert log.count() == n_ops

@@ -68,7 +68,8 @@ def replayed(request, spark):
         ],
         "seq long, t long, pk string, op string, data map<string,string>",
     ).cache()
-    return rows, feed
+    yield rows, feed
+    feed.unpersist()
 
 
 def _python_fold(rows):
@@ -89,15 +90,19 @@ def _python_fold(rows):
     return state
 
 
-def test_log_and_trigger_lanes_complete(replayed):
+def test_log_and_trigger_lanes_complete(replayed, cached):
     rows, feed = replayed
     n_ops = len(rows)
     n_del = sum(1 for r in rows if r["op"] == "delete")
 
-    log = capture.log_capture_ops(feed, FETCH_MS, payload=("data",), merge_payload=True).cache()
-    trig = capture.trigger_capture_ops(
-        feed, EXTRACT_MS, OVERHEAD_MS, payload=("data",), merge_payload=True
-    ).cache()
+    log = cached(
+        capture.log_capture_ops(feed, FETCH_MS, payload=("data",), merge_payload=True)
+    )
+    trig = cached(
+        capture.trigger_capture_ops(
+            feed, EXTRACT_MS, OVERHEAD_MS, payload=("data",), merge_payload=True
+        )
+    )
 
     assert log.count() == n_ops
     assert trig.count() == n_ops
@@ -119,14 +124,16 @@ def test_log_and_trigger_lanes_complete(replayed):
     assert trig.filter(F.col("op") == "d").count() == n_del
 
 
-def test_polling_never_invents(replayed):
+def test_polling_never_invents(replayed, cached):
     rows, feed = replayed
     n_ops = len(rows)
     n_del = sum(1 for r in rows if r["op"] == "delete")
 
-    poll = capture.polling_capture_ops(
-        feed, POLL_MS, include_soft_deletes=True, payload=("data",), merge_payload=True
-    ).cache()
+    poll = cached(
+        capture.polling_capture_ops(
+            feed, POLL_MS, include_soft_deletes=True, payload=("data",), merge_payload=True
+        )
+    )
 
     assert poll.count() <= n_ops
     dupes = (
@@ -172,7 +179,7 @@ def test_snapshot_seeds_survive_when_untouched(replayed):
             assert expected[key] == seed
 
 
-def test_fixture_harness_verdict(replayed):
+def test_fixture_harness_verdict(replayed, cached):
     """The harness nightly pass criterion (``harness/verifier/index.js:169-205``:
     missing=0 ∧ extra=0 ∧ ordering=0) holds for the log lane on every
     fixture — the same check the reference's CI runs over its default
@@ -183,6 +190,6 @@ def test_fixture_harness_verdict(replayed):
     exp = diffs.expected_entries(feed)
     log = capture.log_capture_ops(feed, FETCH_MS, payload=("data",), merge_payload=True)
     act = diffs.actual_entries(log, "ts_ms", ["ts_ms", "lsn"])
-    d = diffs.lane_diff(exp, act).cache()
+    d = cached(diffs.lane_diff(exp, act))
     assert d.filter(F.col("status") != "matched").count() == 0
     assert diffs.ordering_inversions(d).first()["ordering_issues"] == 0

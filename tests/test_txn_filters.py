@@ -101,10 +101,10 @@ def test_pin_scenario(spark, scenarios_df):
     assert len(got) == 3  # replaced, not duplicated
 
 
-def test_event_filters_and_search(spark, sf_dir):
+def test_event_filters_and_search(spark, sf_dir, cached):
     from lets_talk_cdc_change_feed_playground_spark.operators.capture import log_capture
 
-    ev = log_capture(spark, sf_dir).cache()
+    ev = cached(log_capture(spark, sf_dir))
     only_cd = FL.filter_events(ev, ops=("C", "d"))
     assert only_cd.select("op").distinct().count() == 2
     hits = FL.search_events(ev, "purchase tx-", ["after_event_type", "tx_id"])
