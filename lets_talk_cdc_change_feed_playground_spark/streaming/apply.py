@@ -9,11 +9,16 @@ op='d' THEN DELETE WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED AND
 op<>'d' THEN INSERT *``; this dependency-free stand-in keeps identical
 semantics with a read-union-reduce-overwrite cycle per batch, which is the
 same idempotent last-write-wins merge (re-delivered batches converge).
+
+Every versioned ``foreachBatch`` store in the package (this upsert sink, the
+SCD2, index, commit-floor and evolving-schema stores) commits through
+:class:`VersionedStore` and defines only its per-batch ``fold``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -80,21 +85,49 @@ def merge_batch(store_df: DataFrame | None, batch_df: DataFrame) -> DataFrame:
     return folded if passthrough is None else folded.unionByName(passthrough)
 
 
-class UpsertSink:
-    """``foreachBatch`` target maintaining a keyed table as versioned parquet
-    with EXACTLY-ONCE batch application across crash/restart.
+def _marker_batch(version_dir: str) -> int | None:
+    """Batch id recorded inside a committed version (``_batch_{id}`` file)."""
+    try:
+        for f in os.listdir(version_dir):
+            tag = f[len("_batch_"):]
+            if f.startswith("_batch_") and tag.isdigit():
+                return int(tag)
+    except OSError:
+        pass
+    return None
 
-    Each batch reads the latest committed version directory and writes the
-    merged state as the next one (a miniature of Delta's commit versioning).
+
+def list_versions(path: str) -> list[tuple[int, int | None]]:
+    """Committed ``v=N`` directories under ``path``: sorted
+    ``[(version, batch_id | None)]``.  ``_staging-*`` directories and
+    anything else not named ``v=<int>`` are ignored; a version without a
+    ``_batch_{id}`` marker reads with batch id ``None``."""
+    if not os.path.isdir(path):
+        return []
+    out = []
+    for d in os.listdir(path):
+        ver = d[len("v="):]
+        if d.startswith("v=") and ver.isdigit():
+            out.append((int(ver), _marker_batch(os.path.join(path, d))))
+    return sorted(out)
+
+
+class VersionedStore:
+    """``foreachBatch`` target maintaining a table as versioned parquet with
+    EXACTLY-ONCE batch application across crash/restart.
+
+    Each batch reads the latest committed version directory, folds the batch
+    into it (:meth:`fold`, the one method a store defines) and writes the
+    result as the next version (a miniature of Delta's commit versioning).
     Two mechanisms make a crash anywhere in the batch lifecycle safe — the
     reference sink's offset-dedup rule (``scenarios/01-canonical-reference/
     sink/consumer.mjs:122-143``) mapped onto Spark's batch-id re-delivery
     contract:
 
-    - **Atomic commit**: the merged state is written to a staging directory
-      and ``os.rename``d to the FIXED per-version name ``v={n}`` — a crash
-      mid-write leaves only ignorable staging garbage; the rename IS the
-      transaction commit (Delta's _delta_log append analog).
+    - **Atomic commit**: the folded state is written to a ``_staging-*``
+      directory and ``os.rename``d to the FIXED per-version name ``v={n}`` —
+      a crash mid-write leaves only ignorable staging garbage; the rename IS
+      the transaction commit (Delta's _delta_log append analog).
     - **Concurrent-writer fencing**: because the commit target name is
       contended (one ``v={n}`` per version), POSIX rename onto an existing
       non-empty directory fails — two writers that both read version n-1
@@ -102,7 +135,7 @@ class UpsertSink:
       :class:`ConcurrentWriteError` and its staging is discarded, exactly
       Delta's optimistic-concurrency conflict on a lost commit race.  A
       rejected writer retries by re-reading the store (its next attempt
-      merges against the winner's state).
+      folds against the winner's state).
     - **Batch-id ledger** (``dedup_batches=True``): each commit carries an
       underscore-prefixed ``_batch_{id}`` marker file (invisible to
       parquet readers, riding inside the atomic rename); when a crash lands
@@ -110,10 +143,10 @@ class UpsertSink:
       restarted query re-delivers the SAME batch_id and ``__call__`` skips
       it — no double application.  Only sound under a checkpointed stream
       (batch ids reset on checkpoint-less restarts), hence opt-in; without
-      it a re-delivered batch re-merges, which the last-write-wins fold
-      absorbs (idempotent in value, but the ledger is what makes
-      application exactly-once).  Legacy ``v={n}-b={id}`` directory names
-      from older stores still parse.
+      it a re-delivered batch is folded again.  Plain ``v={n}`` directories
+      without a marker still read as versions.
+
+    The store lists its versions once per batch.
     """
 
     def __init__(self, spark: SparkSession, path: str, dedup_batches: bool = False):
@@ -121,58 +154,39 @@ class UpsertSink:
         self.path = path
         self.dedup_batches = dedup_batches
 
-    def _marker_batch(self, dirname: str) -> int | None:
-        """Batch id recorded inside a committed version (``_batch_{id}`` file)."""
-        try:
-            for f in os.listdir(os.path.join(self.path, dirname)):
-                if f.startswith("_batch_"):
-                    tag = f[len("_batch_"):]
-                    if tag.isdigit():
-                        return int(tag)
-        except OSError:
-            pass
-        return None
-
-    def _entries(self) -> list[tuple[int, int | None, str]]:
-        """Committed versions: sorted [(version, batch_id | None, dirname)]."""
-        if not os.path.isdir(self.path):
-            return []
-        out = []
-        for d in os.listdir(self.path):
-            if not d.startswith("v="):
-                continue
-            head, _, btag = d.partition("-b=")
-            ver = head.split("=", 1)[1]
-            if not ver.isdigit():
-                continue
-            b = int(btag) if btag.isdigit() else self._marker_batch(d)
-            out.append((int(ver), b, d))
-        return sorted(out)
+    def fold(self, prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        """The next version's state from the current one (``None`` before
+        the first commit) and one micro-batch."""
+        raise NotImplementedError
 
     def _versions(self) -> list[int]:
-        return [v for v, _b, _d in self._entries()]
+        return [v for v, _b in list_versions(self.path)]
 
     def applied_batches(self) -> set[int]:
-        return {b for _v, b, _d in self._entries() if b is not None}
+        return {b for _v, b in list_versions(self.path) if b is not None}
+
+    def _read(self, version: int) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.path, f"v={version}"))
 
     def current(self) -> DataFrame | None:
-        entries = self._entries()
-        if not entries:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, entries[-1][2]))
+        vs = self._versions()
+        return self._read(vs[-1]) if vs else None
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.dedup_batches and batch_id in self.applied_batches():
-            # crash-restart re-delivery: already committed — skip the merge,
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> int | None:
+        """Fold and commit one batch; returns the committed version, or
+        ``None`` when the ledger already holds ``batch_id``."""
+        entries = list_versions(self.path)
+        if self.dedup_batches and any(b == batch_id for _v, b in entries):
+            # crash-restart re-delivery: already committed — skip the fold,
             # but still run every partition so upstream stateful operators'
             # state stores commit (Spark validates all-partition processing
             # inside foreachBatch; an early return fails the batch)
             batch_df.write.format("noop").mode("overwrite").save()
-            return
-        entries = self._entries()
-        merged = merge_batch(self.current(), batch_df)
+            return None
+        prior = self._read(entries[-1][0]) if entries else None
         nxt = (entries[-1][0] + 1) if entries else 0
-        self._commit(merged, nxt, batch_id)
+        self._commit(self.fold(prior, batch_df), nxt, batch_id)
+        return nxt
 
     def _commit(self, merged: DataFrame, nxt: int, batch_id: int) -> None:
         """Write + atomically publish version ``nxt`` (the fencing point)."""
@@ -190,13 +204,20 @@ class UpsertSink:
             # read and our rename: the fixed per-version target makes the
             # rename the serialization point (rename onto a non-empty
             # directory fails) — reject the losing commit, Delta-style
-            import shutil
-
             shutil.rmtree(staging, ignore_errors=True)
             raise ConcurrentWriteError(
                 f"version {nxt} was committed by a concurrent writer; "
                 "re-read the store and retry the merge"
             ) from e
+
+
+class UpsertSink(VersionedStore):
+    """Keyed last-write-wins table (the S9 sink): each batch's change events
+    are folded in by :func:`merge_batch` and committed through the
+    :class:`VersionedStore` protocol."""
+
+    def fold(self, prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return merge_batch(prior, batch_df)
 
 
 def has_delta() -> bool:
@@ -215,7 +236,7 @@ class DeltaUpsertSink:
     INSERT *``.  Delta's transaction log supplies what the parquet stand-in
     hand-builds: atomic commits (the _delta_log append) and the
     ``txnAppId``/``txnVersion`` idempotent-writer ledger standing in for the
-    batch-id directory tags.
+    ``_batch_{id}`` ledger markers.
 
     Gated on ``delta-spark`` being installed (it is not in this sandbox —
     ``tests/test_delta_sink.py`` is skip-marked and runs the identical

@@ -18,7 +18,7 @@ sink/consumer.mjs:179-232``).  Spark-first mapping:
   (:func:`..operators.schema_evolution.schema_change_events`), and the
   DuckDB oracle pins that equality.
 - **Evolving sink** (:class:`EvolvingUpsertSink`): a keyed versioned-parquet
-  store (same commit-versioning stand-in as :mod:`.apply`) whose MAP state
+  store (a :class:`.apply.VersionedStore`) whose MAP state
   composes across batches with the consumer merge fold, and which ALSO
   materializes a WIDE per-table projection whose parquet schema literally
   gains a column when the registry does — the ALTER TABLE ADD COLUMN
@@ -53,6 +53,10 @@ from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
 from lets_talk_cdc_change_feed_playground_spark.operators.schema_evolution import (  # noqa: E402
     _TYPE_BOOL as _TYPE_BOOL_RE,
     _TYPE_NUM as _TYPE_NUM_RE,
+)
+from lets_talk_cdc_change_feed_playground_spark.streaming.apply import (
+    VersionedStore,
+    list_versions,
 )
 from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import stream_session
 
@@ -155,10 +159,11 @@ class SchemaRegistry:
         return sorted(self.known.get(table, {}), key=self.known[table].get)
 
 
-class EvolvingUpsertSink:
+class EvolvingUpsertSink(VersionedStore):
     """Versioned keyed store whose schema grows mid-stream.
 
-    State (``state/v=N``) is the consumer fold over MAP payloads —
+    State (``state/v=N``, committed through :class:`.apply.VersionedStore`)
+    is the consumer fold over MAP payloads —
     ``(table, pk, data, updated_t)`` — composed batch-over-batch exactly like
     the reference's row store (``src/domain/storage.ts:133-164``): a delete
     drops the key, later updates override only the columns they carry.
@@ -170,35 +175,13 @@ class EvolvingUpsertSink:
     performs (``sink/consumer.mjs:179-232``)."""
 
     def __init__(self, spark: SparkSession, path: str, registry: SchemaRegistry):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, os.path.join(path, "state"))
+        self.root = path
         self.registry = registry
+        # the prior state the running fold persisted; released after commit
+        self._pinned: DataFrame | None = None
 
-    def _versions(self, sub: str) -> list[int]:
-        d = os.path.join(self.path, sub)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(v.split("=")[1])
-            for v in os.listdir(d)
-            if v.startswith("v=") and v.split("=")[1].isdigit()
-        )
-
-    def current(self) -> DataFrame | None:
-        vs = self._versions("state")
-        if not vs:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.path, "state", f"v={vs[-1]}")
-        )
-
-    def apply(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        altered_tables: set[str] | None = None,
-    ) -> None:
-        prev = self.current()
+    def fold(self, prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         # okey: lexicographic (t, seq) event order inside the fold — a struct,
         # NOT t*K+seq arithmetic, which overflows BIGINT at epoch-ms t values.
         # The prev state replays at (-1, -1), strictly before every real event
@@ -234,7 +217,7 @@ class EvolvingUpsertSink:
             on = F.col("table").eqNullSafe(F.col("__bt")) & F.col("pk").eqNullSafe(
                 F.col("__bpk")
             )
-            prev = prev.persist()
+            prev = self._pinned = prev.persist()
             passthrough = prev.join(keys, on, "left_anti")
             ev = (
                 prev.join(keys, on, "left_semi")
@@ -308,13 +291,22 @@ class EvolvingUpsertSink:
         )
         if passthrough is not None:
             merged = merged.unionByName(passthrough)
+        return merged
 
-        nv = (self._versions("state") or [-1])[-1] + 1
-        merged.write.mode("overwrite").parquet(
-            os.path.join(self.path, "state", f"v={nv}")
-        )
-        if prev is not None:
-            prev.unpersist()
+    def apply(
+        self,
+        batch_df: DataFrame,
+        batch_id: int,
+        altered_tables: set[str] | None = None,
+    ) -> None:
+        """Commit the batch's state version, then rewrite the projections of
+        ``altered_tables`` at that version."""
+        try:
+            nv = self(batch_df, batch_id)
+        finally:
+            if self._pinned is not None:
+                self._pinned.unpersist()
+                self._pinned = None
 
         # the ALTER: rewrite a table's wide projection with the registry's
         # CURRENT column set — new columns appear as real parquet columns.
@@ -331,7 +323,7 @@ class EvolvingUpsertSink:
         )
         # one read of the just-committed version, persisted across the
         # projection writes (each write would otherwise rescan it).
-        state = self.current().persist() if targets else None
+        state = self._read(nv).persist() if targets else None
         try:
             self._write_projections(targets, nv, state)
         finally:
@@ -359,7 +351,7 @@ class EvolvingUpsertSink:
                 *[F.element_at("data", c).alias(c) for c in cols],
                 "updated_t",
             ).write.mode("overwrite").parquet(
-                os.path.join(self.path, "tables", tbl, f"v={nv}")
+                os.path.join(self.root, "tables", tbl, f"v={nv}")
             )
 
         def _write_group(item) -> None:
@@ -369,7 +361,7 @@ class EvolvingUpsertSink:
                 return
             # staged inside the sink's own directory, so the renames below
             # never cross a filesystem
-            tmp = os.path.join(self.path, "_staging", f"v={nv}_g{i}")
+            tmp = os.path.join(self.root, "_staging", f"v={nv}_g{i}")
             try:
                 state.filter(F.col("table").isin(list(tbls))).select(
                     "table",
@@ -379,7 +371,7 @@ class EvolvingUpsertSink:
                 ).write.partitionBy("table").mode("overwrite").parquet(tmp)
                 for tbl in tbls:
                     src = os.path.join(tmp, f"table={tbl}")
-                    dst = os.path.join(self.path, "tables", tbl, f"v={nv}")
+                    dst = os.path.join(self.root, "tables", tbl, f"v={nv}")
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     if os.path.isdir(dst):
                         shutil.rmtree(dst)
@@ -401,27 +393,27 @@ class EvolvingUpsertSink:
         write per table, once, when the stream drains (between ALTERs the
         live store is the map state; this materializes the final read
         surface)."""
-        nv = (self._versions("state") or [0])[-1]
-        state = self.current()
-        if state is None:
+        vs = self._versions()
+        if not vs:
             return
+        nv = vs[-1]
         stale = [
             tbl
             for tbl in sorted(self.registry.known)
-            if not os.path.isdir(os.path.join(self.path, "tables", tbl, f"v={nv}"))
+            if not os.path.isdir(os.path.join(self.root, "tables", tbl, f"v={nv}"))
         ]  # already-current tables were rewritten by this batch's ALTER
-        state = state.persist()
+        state = self._read(nv).persist()
         try:
             self._write_projections(stale, nv, state)
         finally:
             state.unpersist()
 
     def table_versions(self, table: str) -> list[int]:
-        return self._versions(os.path.join("tables", table))
+        return [v for v, _b in list_versions(os.path.join(self.root, "tables", table))]
 
     def read_table(self, table: str, version: int) -> DataFrame:
         return self.spark.read.parquet(
-            os.path.join(self.path, "tables", table, f"v={version}")
+            os.path.join(self.root, "tables", table, f"v={version}")
         )
 
 

@@ -45,6 +45,10 @@ from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
     OPS_SQL,
     ops_feed,
 )
+from lets_talk_cdc_change_feed_playground_spark.streaming.apply import (
+    UpsertSink,
+    VersionedStore,
+)
 from lets_talk_cdc_change_feed_playground_spark.streaming.capture import (
     OPS_SCHEMA,
     log_capture_stream,
@@ -252,13 +256,30 @@ def _start_complete(stream_df: DataFrame):
     driver-sized by construction.  The table is a view of the stream
     session: read it through ``stream_session(spark)``."""
     name = f"sg_stream_sink_{next(_sink_ids)}"
+    ckpt = scratch_dir(stream_df.sparkSession, f"{name}_ckpt_")
     q = (
         stream_df.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
+        .option("checkpointLocation", ckpt)
         .start()
     )
     return q, name
+
+
+def _start_store(sink_cls, name: str, stream_df: DataFrame):
+    """Start a checkpointed stream (a capture or a plain feed) into a fresh
+    ``sink_cls`` store on the batch-id ledger; returns (query, sink)."""
+    spark = stream_df.sparkSession
+    store = scratch_dir(spark, f"sg_{name}_store_")
+    sink = sink_cls(spark, store, dedup_batches=True)
+    q = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", scratch_dir(spark, f"sg_{name}_ckpt_"))
+        .foreachBatch(sink)
+        .start()
+    )
+    return q, sink
 
 
 def _member(name: str, start):
@@ -305,7 +326,6 @@ def _family(spark: SparkSession, sf_dir: str, fam: str) -> dict:
 
 def _ops_family(spark: SparkSession, sf_dir: str) -> dict:
     """One pass over the staged ops feed for its nine judged consumers."""
-    from lets_talk_cdc_change_feed_playground_spark.streaming.apply import UpsertSink
     from lets_talk_cdc_change_feed_playground_spark.streaming.polling import (
         polling_capture_stream,
         trigger_capture_stream,
@@ -321,8 +341,9 @@ def _ops_family(spark: SparkSession, sf_dir: str) -> dict:
         # out to every consumer of the capture stream
         ss = stream_session(spark)
         wal_dir = scratch_dir(spark, "sg_fam_wal_")
-        upsert = UpsertSink(ss, scratch_dir(spark, "sg_upsert_store_"))
-        scd2 = _Scd2Sink(ss, scratch_dir(spark, "sg_scd2_store_"))
+        upsert_dir = scratch_dir(spark, "sg_upsert_store_")
+        upsert = UpsertSink(ss, upsert_dir, dedup_batches=True)
+        scd2 = _Scd2Sink(ss, scratch_dir(spark, "sg_scd2_store_"), dedup_batches=True)
 
         def fanout(bdf: DataFrame, bid: int) -> None:
             bdf.persist()
@@ -409,8 +430,28 @@ def _solo_family(spark: SparkSession, sf_dir: str) -> dict:
         "docs_dedup_dir": lambda: _start_append(
             _docs_dedup_stream(spark, sf_dir), "sg_fam_docsdedup"
         ),
-        "index_sink": lambda: _start_index_sink(spark, sf_dir),
-        "erasure_sink": lambda: _start_erasure_sink(spark, sf_dir),
+        "index_sink": lambda: _start_store(
+            _IndexSink,
+            "index",
+            _read_chunks(
+                spark,
+                "doc_id BIGINT, norm STRING",
+                _doc_text_chunks(spark, sf_dir),
+                _MAX_FILES_PER_TRIGGER,
+            ),
+        ),
+        "erasure_sink": lambda: _start_store(
+            UpsertSink,
+            "erasure",
+            log_capture_stream(
+                _read_chunks(
+                    spark,
+                    OPS_SCHEMA,
+                    _erasure_chunks(spark, sf_dir),
+                    _MAX_FILES_PER_TRIGGER,
+                )
+            ),
+        ),
     }
     # pre-stage every member's chunk feed, so each start only starts its
     # query (starts run one after another on this thread)
@@ -783,10 +824,10 @@ ORDER BY apply_seq
     )
 
 
-class _CommitStoreSink:
+class _CommitStoreSink(UpsertSink):
     """``foreachBatch`` target for the DISTRIBUTED apply-on-commit path: the
     watermark-released transactions of each micro-batch are exploded to row
-    events and merged into a versioned-parquet keyed store via
+    events and merged into the versioned-parquet keyed store of
     :class:`..streaming.apply.UpsertSink` — no ``collect()`` anywhere in the
     applied path (the collecting ``OrderedApplySink`` in
     ``tests/test_streaming.py`` is a unit-test ordering probe only).
@@ -800,15 +841,8 @@ class _CommitStoreSink:
     ``(commit_ts, lsn)`` order, distributed."""
 
     def __init__(self, spark: SparkSession, path: str):
-        from lets_talk_cdc_change_feed_playground_spark.streaming.apply import (
-            UpsertSink,
-        )
-
-        self._upsert = UpsertSink(spark, path)
+        super().__init__(spark, path)
         self.floor: int | None = None
-
-    def current(self):
-        return self._upsert.current()
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         ev = (
@@ -840,7 +874,7 @@ class _CommitStoreSink:
                 f"commit floor violated: batch {batch_id} released "
                 f"commit_ts {bounds['lo']} <= applied floor {self.floor}"
             )
-        self._upsert(ev, batch_id)
+        super().__call__(ev, batch_id)
         self.floor = int(bounds["hi"])
 
 
@@ -1111,7 +1145,12 @@ def stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigger IS the backpressure cap being judged (the oracle derives the
     # timeline from that quantum) — an execution knob elsewhere, semantics here
     src = _read_chunks(spark, OPS_SCHEMA, path, 1)
-    q = src.writeStream.outputMode("append").foreachBatch(audit).start()
+    q = (
+        src.writeStream.outputMode("append")
+        .option("checkpointLocation", scratch_dir(spark, "sg_bp_ckpt_"))
+        .foreachBatch(audit)
+        .start()
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -2110,9 +2149,10 @@ ORACLE = {
 # ---------------------------------------------------------------------------
 
 
-class _Scd2Sink:
-    """``foreachBatch`` target maintaining an SCD type-2 dimension as
-    versioned parquet (same commit-versioning miniature as ``UpsertSink``).
+class _Scd2Sink(VersionedStore):
+    """``foreachBatch`` target maintaining an SCD type-2 dimension as a
+    :class:`..streaming.apply.VersionedStore` (staged-rename commits plus
+    the batch-id ledger).
 
     Per batch: the dimension's open version for every key touched in the
     batch is closed at the key's first batch change; the batch's non-delete
@@ -2120,26 +2160,7 @@ class _Scd2Sink:
     (state carried across micro-batches — the incremental twin of the
     batch ``cdc_scd2_history`` window fold)."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(self.path)
-            if d.startswith("v=") and d.split("=")[1].isdigit()
-        )
-
-    def current(self) -> DataFrame | None:
-        vs = self._versions()
-        if not vs:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v={vs[-1]}"))
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def fold(self, prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = batch_df.select(
             "pk", "seq", "op",
             F.col("after_event_type").alias("event_type"),
@@ -2159,9 +2180,8 @@ class _Scd2Sink:
             )
             .filter(F.col("op") != "d")
         )
-        prior = self.current()
         if prior is None:
-            out = new_rows.select(
+            return new_rows.select(
                 "pk",
                 F.col("dv").alias("version"),
                 "event_type", "value", "props", "valid_from_ms", "valid_to_ms",
@@ -2189,10 +2209,7 @@ class _Scd2Sink:
                     F.col("valid_to_ms").isNull().alias("is_current"),
                 )
             )
-            out = closed.unionByName(opened)
-        vs = self._versions()
-        nxt = (vs[-1] + 1) if vs else 0
-        out.write.mode("overwrite").parquet(os.path.join(self.path, f"v={nxt}"))
+        return closed.unionByName(opened)
 
 
 def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2254,32 +2271,14 @@ def _doc_text_chunks(spark: SparkSession, sf_dir: str) -> str:
     return flat
 
 
-class _IndexSink:
+class _IndexSink(VersionedStore):
     """``foreachBatch`` target maintaining term statistics (df, total tf) as
-    versioned parquet — incremental inverted-index maintenance: each batch
-    contributes per-term deltas (docs are immutable, so deltas only add),
-    merged into the running index by a term-keyed aggregate."""
+    a :class:`..streaming.apply.VersionedStore` — incremental inverted-index
+    maintenance: each batch contributes per-term deltas (docs are immutable,
+    so deltas only add), merged into the running index by a term-keyed
+    aggregate."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(self.path)
-            if d.startswith("v=") and d.split("=")[1].isdigit()
-        )
-
-    def current(self) -> DataFrame | None:
-        vs = self._versions()
-        if not vs:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v={vs[-1]}"))
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def fold(self, prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         from lets_talk_cdc_change_feed_playground_spark.functions import textops as T
 
         tok = batch_df.select(
@@ -2294,19 +2293,16 @@ class _IndexSink:
                 F.sum("tf").cast("long").alias("total_tf"),
             )
         )
-        prior = self.current()
-        if prior is not None:
-            delta = (
-                prior.unionByName(delta)
-                .groupBy("term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("total_tf").cast("long").alias("total_tf"),
-                )
+        if prior is None:
+            return delta
+        return (
+            prior.unionByName(delta)
+            .groupBy("term")
+            .agg(
+                F.sum("df").cast("long").alias("df"),
+                F.sum("total_tf").cast("long").alias("total_tf"),
             )
-        vs = self._versions()
-        nxt = (vs[-1] + 1) if vs else 0
-        delta.write.mode("overwrite").parquet(os.path.join(self.path, f"v={nxt}"))
+        )
 
 
 def stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2319,25 +2315,10 @@ def stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: per batch one term-keyed aggregate (map-side combinable)
     + a term-keyed merge with the prior state — exactly a Delta MERGE on
-    the index table; state versioning is the upsert-sink miniature."""
+    the index table; state commits through
+    :class:`..streaming.apply.VersionedStore`."""
     sink = _family(spark, sf_dir, "solo")["index_sink"]
     return sink.current().select("term", "df", "total_tf").orderBy("term")
-
-
-def _start_index_sink(spark: SparkSession, sf_dir: str):
-    chunks = _doc_text_chunks(spark, sf_dir)
-    src = _read_chunks(
-        spark, "doc_id BIGINT, norm STRING", chunks, _MAX_FILES_PER_TRIGGER
-    )
-    sink = _IndexSink(stream_session(spark), scratch_dir(spark, "sg_index_store_"))
-    ckpt = scratch_dir(spark, "sg_index_ckpt_")
-    q = (
-        src.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink
 
 
 def _stream_index_sql() -> str:
@@ -2442,24 +2423,6 @@ def stream_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pk", "event_type", "value", "props")
         .orderBy("pk")
     )
-
-
-def _start_erasure_sink(spark: SparkSession, sf_dir: str):
-    from lets_talk_cdc_change_feed_playground_spark.streaming.apply import UpsertSink
-
-    src = _read_chunks(
-        spark, OPS_SCHEMA, _erasure_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
-    )
-    sink = UpsertSink(stream_session(spark), scratch_dir(spark, "sg_erasure_store_"))
-    ckpt = scratch_dir(spark, "sg_erasure_ckpt_")
-    q = (
-        log_capture_stream(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink
 
 
 def _stream_erasure_sql() -> str:
@@ -2575,10 +2538,6 @@ def cdc_restart_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay fold of the full WAL — the same oracle as the uncrashed
     ``stream_upsert_sink``."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from lets_talk_cdc_change_feed_playground_spark.streaming.apply import (
-        UpsertSink,
-    )
 
     chunks = _ops_chunks(spark, sf_dir)
     sink = UpsertSink(

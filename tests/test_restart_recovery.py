@@ -6,8 +6,9 @@ The reference's connector-restart failure scenario
 and requires the Postgres sink to converge after restart, with offset dedup
 (``sink/consumer.mjs:122-143``) preventing double application. Spark
 mapping: foreachBatch re-delivers the same batch_id after a checkpointed
-restart; ``UpsertSink(dedup_batches=True)`` commits state via atomic rename
-with the batch_id in the ledger name, so:
+restart; a ``VersionedStore`` with ``dedup_batches=True`` (``UpsertSink``,
+the SCD2 dimension sink) commits state via atomic rename with a
+``_batch_{id}`` ledger marker inside the version, so:
 
 - crash AFTER the sink commit, BEFORE the stream checkpoint commit → the
   re-delivered batch is skipped (no double application);
@@ -28,6 +29,9 @@ from lets_talk_cdc_change_feed_playground_spark.streaming.apply import UpsertSin
 from lets_talk_cdc_change_feed_playground_spark.streaming.capture import (
     OPS_SCHEMA,
     log_capture_stream,
+)
+from lets_talk_cdc_change_feed_playground_spark.streaming.stream_queries import (
+    _Scd2Sink,
 )
 from lets_talk_cdc_change_feed_playground_spark.streaming.workload import (
     ops_from_counter,
@@ -70,22 +74,21 @@ def _expected_state(spark, chunks_dir):
     )
 
 
-def _drive(spark, chunks_dir, wrapper, ckpt):
-    def start():
-        src = (
-            spark.readStream.schema(OPS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks_dir)
-        )
-        return (
-            log_capture_stream(src)
-            .writeStream.outputMode("append")
-            .foreachBatch(wrapper)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+def _start(spark, chunks_dir, wrapper, ckpt, files_per_trigger=1):
+    src = spark.readStream.schema(OPS_SCHEMA)
+    if files_per_trigger is not None:
+        src = src.option("maxFilesPerTrigger", files_per_trigger)
+    return (
+        log_capture_stream(src.parquet(chunks_dir))
+        .writeStream.outputMode("append")
+        .foreachBatch(wrapper)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
 
-    q = start()
+
+def _drive(spark, chunks_dir, wrapper, ckpt):
+    q = _start(spark, chunks_dir, wrapper, ckpt)
     crashed = False
     try:
         q.processAllAvailable()
@@ -94,7 +97,16 @@ def _drive(spark, chunks_dir, wrapper, ckpt):
     finally:
         q.stop()
     assert crashed, "injected crash did not fire"
-    q = start()  # restart from the SAME checkpoint
+    q = _start(spark, chunks_dir, wrapper, ckpt)  # restart from the SAME checkpoint
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _drain(spark, chunks_dir, sink, ckpt):
+    """An uncrashed run over the whole feed, every chunk in one batch."""
+    q = _start(spark, chunks_dir, sink, ckpt, files_per_trigger=None)
     try:
         q.processAllAvailable()
     finally:
@@ -108,11 +120,14 @@ def _assert_converged(spark, sink, chunks_dir):
     assert got.exceptAll(want).count() == 0
 
 
-def test_crash_after_sink_commit_is_not_applied_twice(spark, chunks_dir, tmp_path):
+@pytest.mark.parametrize("store_cls", [UpsertSink, _Scd2Sink], ids=lambda c: c.__name__)
+def test_crash_after_sink_commit_is_not_applied_twice(
+    spark, chunks_dir, tmp_path, store_cls
+):
     """Kill between the sink's atomic commit and the stream's checkpoint
     commit: restart re-delivers the batch, the ledger skips it, every batch
-    ends applied exactly once, state converges."""
-    sink = UpsertSink(spark, str(tmp_path / "store"), dedup_batches=True)
+    ends applied exactly once, and the store equals an uncrashed run's."""
+    sink = store_cls(spark, str(tmp_path / "store"), dedup_batches=True)
     effective: list[int] = []
 
     class Wrapper:
@@ -132,9 +147,15 @@ def test_crash_after_sink_commit_is_not_applied_twice(spark, chunks_dir, tmp_pat
     _drive(spark, chunks_dir, Wrapper(), str(tmp_path / "ckpt"))
     # batch 1 was delivered twice but applied once; 3 batches, 3 commits
     assert sorted(effective) == [0, 1, 2]
-    assert sorted(sink.applied_batches()) == [0, 1, 2]
+    assert sink.applied_batches() == {0, 1, 2}
     assert len(sink._versions()) == 3
-    _assert_converged(spark, sink, chunks_dir)
+    clean = store_cls(spark, str(tmp_path / "clean"), dedup_batches=True)
+    _drain(spark, chunks_dir, clean, str(tmp_path / "clean_ckpt"))
+    got, want = sink.current(), clean.current()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    if store_cls is UpsertSink:
+        _assert_converged(spark, sink, chunks_dir)
 
 
 def test_crash_before_sink_commit_reapplies_on_restart(spark, chunks_dir, tmp_path):
@@ -173,7 +194,7 @@ def test_ledger_parses_legacy_version_dirs(spark, tmp_path):
     merge_batch(None, df).write.parquet(os.path.join(store, "v=0"))
     assert sink._versions() == [0]
     assert sink.applied_batches() == set()
-    sink(df, 7)  # appends v=1-b=7 on top of the legacy dir
+    sink(df, 7)  # commits v=1 with a _batch_7 marker on top of the legacy dir
     assert sink._versions() == [0, 1]
     assert sink.applied_batches() == {7}
     assert sink.current().count() == 1

@@ -599,3 +599,50 @@ def test_streams_run_in_the_stream_session(spark, tmp_path):
     SQ._run_streams([start])
     assert seen == [(own, str(STREAM_PARTS))]
     assert spark.conf.get(key) == own
+
+
+def test_streams_checkpoint_under_the_session_root(spark, sf_dir, monkeypatch):
+    """The memory-sink aggregations (``stream_hourly_stats``,
+    ``stream_sessionize``) and the ``stream_backpressure`` audit stream each
+    start with a ``checkpointLocation`` under the session scratch root.  A
+    stream without one makes Spark create a temporary checkpoint under
+    ``java.io.tmpdir``, outside the root that ``clear_shared()`` deletes."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from lets_talk_cdc_change_feed_playground_spark.operators.shared import (
+        scratch_dir,
+    )
+    from lets_talk_cdc_change_feed_playground_spark.streaming import (
+        stream_queries as SQ,
+    )
+
+    root = os.path.dirname(scratch_dir(spark, "sg_probe_"))
+    options: dict[int, dict] = {}
+    started: list[dict] = []
+    option, start = DataStreamWriter.option, DataStreamWriter.start
+
+    def record_option(self, key, value):
+        options.setdefault(id(self), {})[key] = value
+        return option(self, key, value)
+
+    def record_start(self, *args, **kwargs):
+        started.append({**options.get(id(self), {}), **kwargs})
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "option", record_option)
+    monkeypatch.setattr(DataStreamWriter, "start", record_start)
+
+    chunks = SQ._ops_chunks(spark, sf_dir)
+    for agg in (SQ._hourly_agg, SQ._sessionize_agg):
+        q, _table = SQ._start_complete(
+            agg(SQ._read_chunks(spark, OPS_SCHEMA, chunks, None))
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    SQ.stream_backpressure(spark, sf_dir)
+    assert len(started) == 3
+    for opts in started:
+        ckpt = opts.get("checkpointLocation", "")
+        assert ckpt.startswith(root + os.sep), opts
