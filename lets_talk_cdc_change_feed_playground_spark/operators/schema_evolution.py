@@ -16,7 +16,8 @@ DataFrame work:
 - ``replay_fold``: the consumer fold (``src/domain/storage.ts:133-164``):
   delete removes the key, insert/update merge ``{**existing, **after}`` —
   an ordered ``aggregate`` over each key's events with LAST_WIN map merge.
-- ``project_drift`` (A10): drop a drifted column from payloads.
+- ``replay_fold(drop_columns=...)`` (A10): the fold with drifted columns
+  dropped from every payload.
 - ``canon_value`` (V6): type-coercing canonicalisation for comparisons
   (numeric strings → canonical number form, trimmed strings otherwise).
 """
@@ -25,8 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from lets_talk_cdc_change_feed_playground_spark.functions.maps import merge_maps as _merge_maps
 
 #: storage.ts:35-43 — value-shape based column type inference.
 _TYPE_BOOL = r"^(true|false)$"
@@ -228,15 +227,6 @@ def _project(after: Column, drop_columns: tuple[str, ...]) -> Column:
     for c in drop_columns:
         out = F.map_filter(out, _drop_key(c))
     return out
-
-
-def project_drift(events: DataFrame, column: str, payload_col: str = "after") -> DataFrame:
-    """A10 — drop a drifted column from event payloads
-    (``src/changefeed/model.ts:111-121``)."""
-    return events.withColumn(
-        payload_col,
-        F.map_filter(F.col(payload_col), lambda k, _v: k != F.lit(column)),
-    )
 
 
 def canon_value(v: Column) -> Column:

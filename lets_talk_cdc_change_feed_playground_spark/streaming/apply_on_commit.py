@@ -7,8 +7,9 @@ passes a commit timestamp, no earlier-committing event can still arrive.
 
 Pipeline shape:
 
-1. upstream: :func:`..streaming.txn.assemble_transactions` guarantees only
-   complete transactions flow in (partial txns stay in keyed state);
+1. upstream: :func:`..streaming.txn.assemble_transactions_bucketed`
+   guarantees only complete transactions flow in (partial txns stay in
+   keyed state);
 2. this stage groups events into ``(commit window, tx_id)`` buckets under a
    watermark on ``commit_ts``; **append output mode emits a bucket only when
    the watermark has passed its window end** — the floor barrier, enforced by

@@ -1,12 +1,14 @@
 """Judged Structured Streaming queries — the streaming engine hash-checked.
 
-Every other streaming proof in this repo lives in pytest; these two entries
-put a REAL streaming job inside the driver's correctness gate: the ops feed
-is staged once as time-split parquet chunk files, consumed one file per
-micro-batch (the micro-batch trigger playing the reference's fetch-interval
-role, ``sim/engines/LogEngine.ts:10``), pushed through a streaming stateful
-operator, and the final memory-sink table is returned for the DuckDB hash
-compare.
+Every other streaming proof in this repo lives in pytest; the 21 judged
+streams here (every ``stream_*`` query plus ``cdc_restart_convergence``) put
+REAL streaming jobs inside the oracle correctness gate: each feed is
+staged once as a chunk feed (time-split parquet chunk files, the contract in
+``streaming/runtime.py``), consumed a few files per micro-batch (the
+micro-batch trigger playing the reference's fetch-interval role,
+``sim/engines/LogEngine.ts:10``), pushed through streaming stateful
+operators, and the final sink table is returned for the DuckDB hash compare.
+Two examples:
 
 - ``stream_log_capture`` — C1 incrementally: per-key row-image state crosses
   micro-batch boundaries (``applyInPandasWithState``), so before-images are
@@ -20,10 +22,10 @@ compare.
   chunking internals rather than query semantics.)
 
 Scale notes: staging time-split chunks is the local stand-in for a Kafka
-topic (per-partition time order) — at 100 TB the same two queries read
-``spark.readStream.format("kafka")`` and the memory sink becomes a Delta
-table; nothing else changes. The chunk staging itself is distributed (range
-split on ``t`` + filtered writes), never a driver collect.
+topic (per-partition time order) — at 100 TB the same queries read
+``spark.readStream.format("kafka")`` and the memory sinks become Delta
+tables; nothing else changes. The chunk staging itself is distributed (a
+chunk id per row + one partitioned write), never a driver collect.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from __future__ import annotations
 import functools
 import itertools
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -45,6 +46,7 @@ from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
     OPS_SQL,
     ops_feed,
 )
+from lets_talk_cdc_change_feed_playground_spark.streaming import runtime
 from lets_talk_cdc_change_feed_playground_spark.streaming.apply import (
     UpsertSink,
     VersionedStore,
@@ -53,21 +55,20 @@ from lets_talk_cdc_change_feed_playground_spark.streaming.capture import (
     OPS_SCHEMA,
     log_capture_stream,
 )
-
-from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (  # noqa: E402
+from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (
+    chunk_feed,
+    quantile_chunks,
+    read_chunks,
     stream_session,
 )
+from lets_talk_cdc_change_feed_playground_spark.streaming.schema_stream import (
+    STREAM_SCHEMA_EVOLUTION_SQL,
+    stream_schema_evolution,
+)
 
-_N_CHUNKS = 3
-# intake granularity for every file-source readStream below, in staged chunk
-# files per micro-batch.  The judged default is 2: with 3 staged chunks that
-# is the minimum honest streaming shape — state still provably crosses a
-# micro-batch boundary — at two triggers' machinery instead of three (the
-# outputs are proven batching-invariant by tests/test_stream_fuzz.py, which
-# varies both knobs at CALL time, including the 1-file-per-trigger extreme).
-# stream_backpressure pins its own cap to 1: there the per-trigger quantum
-# IS the judged semantics (the drain timeline), not an execution knob.
-_MAX_FILES_PER_TRIGGER = 2
+# The batching knobs N_CHUNKS and MAX_FILES_PER_TRIGGER are read as
+# ``runtime.<knob>`` at call time, so the batching fuzz's patches reach them.
+
 # stream_ivm_join stages one file per maintenance epoch and takes three per
 # trigger (two triggers for six epochs): epochs still fold one at a time
 # inside its sink and state still crosses a batch boundary, but the stream
@@ -76,134 +77,15 @@ _MAX_FILES_PER_TRIGGER = 2
 _IVM_FILES_PER_TRIGGER = 3
 
 
-def _chunk_feed(kind: str, count=lambda: _N_CHUNKS):
-    """Memoise a chunk-feed stager in the session registry.  The key names
-    the chunk count, read at call time, so the batching fuzz stages its own
-    feeds beside the judged ones instead of clearing them."""
-
-    def deco(build):
-        @functools.wraps(build)
-        def stage(spark: SparkSession, sf_dir: str) -> str:
-            key = (f"{kind}_chunks", sf_dir, count())
-            return memo(spark, key, lambda: build(spark, sf_dir))
-
-        return stage
-
-    return deco
-
-
-def _split_qs() -> list[float]:
-    """Quantile cut points that split a feed into ``_N_CHUNKS`` chunks."""
-    return [i / _N_CHUNKS for i in range(1, _N_CHUNKS)]
-
-
-def _read_chunks(
-    spark: SparkSession, schema, path: str, files_per_trigger: int | None
-) -> DataFrame:
-    """Open a file-source stream over a staged chunk directory in the stream
-    session (``streaming/runtime.py``), ``files_per_trigger`` chunk files per
-    micro-batch (``None``: every file available)."""
-    reader = stream_session(spark).readStream.schema(schema)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    return reader.parquet(path)
-
-
-def _pin_chunk(src_path: str, dst_path: str, order: int) -> None:
-    """Move a staged chunk file into place with a PINNED strictly-increasing
-    mtime. FileStreamSource orders files by modification time (path only
-    breaks ties) and os.rename preserves the task-write mtime — two chunks
-    written within the same millisecond would otherwise rely on the
-    path-order tiebreak for their delivery order."""
-    os.rename(src_path, dst_path)
-    base = int(_PIN_BASE)
-    os.utime(dst_path, (base + order, base + order))
-
-
-_PIN_BASE = time.time()
-
-
-def _chunk_id(order_col, cuts: list) -> "F.Column":
-    """Chunk index of an order value against quantile cut points = number of
-    cuts strictly below it — identical to the (lo, hi] range filters the
-    per-chunk writers used."""
-    cid = F.lit(0)
-    for c in cuts:
-        cid = cid + F.when(order_col > F.lit(c), 1).otherwise(0)
-    return cid
-
-
-def _write_split_chunks(
-    df: DataFrame, n_chunks: int, prefix: str, order: list[str], drop=()
-) -> str:
-    """Write a chunk-tagged frame (int ``__chunk`` in [0, n_chunks)) as one
-    pinned-mtime file per chunk in ONE distributed job (repartition on the
-    chunk id + dynamic partitioning) instead of one filtered scan+write per
-    chunk — the per-chunk writers re-scanned their feed frame n_chunks
-    times and serialized n_chunks job round-trips (guide §2.4/§1.2).
-    Repartitioning BY the id puts each chunk's rows in exactly one task, so
-    every partition dir holds exactly one file; a quantile-degenerate EMPTY
-    chunk falls back to a single empty (schema-ful) file, matching what the
-    per-chunk writer produced.  Each chunk is sorted on ``order`` (the
-    column its cut points split, plus a unique tiebreak), so a restage
-    writes byte-identical files whatever order the shuffle delivered its
-    rows in; the ``drop`` columns are sort keys only.  Returns the flat
-    chunk dir."""
-    sp = df.sparkSession
-    out = scratch_dir(sp, prefix)
-    pdir = os.path.join(out, "parts")
-    flat = os.path.join(out, "flat")
-    os.makedirs(flat)
-    schema = df.drop("__chunk", *drop).schema
-    # the chunk id leads the sort key, so the partitioned writer's required
-    # ordering is already met and it adds no sort of its own
-    (
-        df.repartition("__chunk")
-        .sortWithinPartitions("__chunk", *order)
-        .drop(*drop)
-        .write.partitionBy("__chunk")
-        .parquet(pdir)
-    )
-    for i in range(n_chunks):
-        cdir = os.path.join(pdir, f"__chunk={i}")
-        parts = (
-            sorted(f for f in os.listdir(cdir) if f.endswith(".parquet"))
-            if os.path.isdir(cdir)
-            else []
-        )
-        if not parts:
-            cdir = os.path.join(out, f"empty{i}")
-            sp.createDataFrame([], schema).coalesce(1).write.parquet(cdir)
-            parts = sorted(f for f in os.listdir(cdir) if f.endswith(".parquet"))
-        if len(parts) != 1:
-            raise AssertionError(
-                f"chunk staging: chunk {i} holds {len(parts)} files; "
-                "mtime-ordered delivery requires exactly one"
-            )
-        _pin_chunk(
-            os.path.join(cdir, parts[0]), os.path.join(flat, f"{i:02d}.parquet"), i
-        )
-    return flat
-
-
 _sink_ids = itertools.count()
 
 
-@_chunk_feed("ops")
-def _ops_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the ops feed as ``_N_CHUNKS`` time-split parquet files, written
-    oldest-first so the file source's modification-time ordering replays them
-    in event-time order (per-key order across batches — the same guarantee a
-    keyed Kafka topic gives per partition)."""
-    ops = ops_feed(spark, sf_dir)
-    cuts = ops.approxQuantile("t", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        ops.withColumn("__chunk", _chunk_id(F.col("t"), cuts)),
-        _N_CHUNKS,
-        "sg_ops_chunks_",
-        ["t", "seq"],
-    )
-    return flat
+@chunk_feed("ops", order=["t", "seq"])
+def _ops_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ops feed as time-split chunks, oldest first, so the file source
+    replays them in event-time order (per-key order across batches — the
+    same guarantee a keyed Kafka topic gives per partition)."""
+    return quantile_chunks(ops_feed(spark, sf_dir), "t")
 
 
 # ---------------------------------------------------------------------------
@@ -226,13 +108,15 @@ def _ops_chunks(spark: SparkSession, sf_dir: str) -> str:
 #   pass itself (txn assembly, watermark dedup, rate limit, docs dedup,
 #   index maintenance, erasure); started together, drained together.
 #
-# A family's artifacts (output dirs, sink objects) are staged once per
-# session in the registry (operators/shared.py), keyed by every input they
-# depend on: the feed, the chunk count and the files per trigger.  Each
-# judged query assembles its result from its member's artifact.  The
-# batching-invariance fuzz varies the two batching inputs, so each of its
-# variants runs the whole family — fan-out and all — once, beside the
-# judged run: the fuzz covers the judged path itself.
+# Every feed is a chunk feed (the contract in ``streaming/runtime.py``).  A
+# family builds every member's stream frame, which stages its feed, before
+# it starts any query.  A family's artifacts (output dirs, sink objects) are
+# staged once per session in the registry (operators/shared.py), keyed by
+# every input they depend on: the feed, the chunk count and the files per
+# trigger.  Each judged query assembles its result from its member's
+# artifact.  The batching-invariance fuzz varies the two batching inputs, so
+# each of its variants runs the whole family — fan-out and all — once, beside
+# the judged run: the fuzz covers the judged path itself.
 # ---------------------------------------------------------------------------
 
 
@@ -282,12 +166,12 @@ def _start_store(sink_cls, name: str, stream_df: DataFrame):
     return q, sink
 
 
-def _member(name: str, start):
-    """A family start for one member: runs ``start`` (returning
+def _member(name: str, start, *args):
+    """A family start for one member: runs ``start(*args)`` (returning
     ``(query, artifact)``) and names the artifact."""
 
     def run():
-        q, art = start()
+        q, art = start(*args)
         return q, {name: art}
 
     return run
@@ -320,7 +204,7 @@ def _run_streams(starts: list) -> dict:
 
 def _family(spark: SparkSession, sf_dir: str, fam: str) -> dict:
     """Every member artifact of family ``fam``, from its one session pass."""
-    key = ("family", sf_dir, fam, _N_CHUNKS, _MAX_FILES_PER_TRIGGER)
+    key = ("family", sf_dir, fam, runtime.N_CHUNKS, runtime.MAX_FILES_PER_TRIGGER)
     return memo(spark, key, lambda: _FAMILY_RUNNERS[fam](spark, sf_dir))
 
 
@@ -334,9 +218,9 @@ def _ops_family(spark: SparkSession, sf_dir: str) -> dict:
     chunks = _ops_chunks(spark, sf_dir)
 
     def src() -> DataFrame:
-        return _read_chunks(spark, OPS_SCHEMA, chunks, _MAX_FILES_PER_TRIGGER)
+        return read_chunks(spark, OPS_SCHEMA, chunks, runtime.MAX_FILES_PER_TRIGGER)
 
-    def start_wal_fanout():
+    def start_wal_fanout(capture: DataFrame):
         # the C1 keyed-state capture runs ONCE; each WAL micro-batch fans
         # out to every consumer of the capture stream
         ss = stream_session(spark)
@@ -355,28 +239,37 @@ def _ops_family(spark: SparkSession, sf_dir: str) -> dict:
                 bdf.unpersist()
 
         q = (
-            log_capture_stream(src())
-            .writeStream.outputMode("append")
+            capture.writeStream.outputMode("append")
             .option("checkpointLocation", scratch_dir(spark, "sg_fam_wal_ckpt_"))
             .foreachBatch(fanout)
             .start()
         )
         return q, {"wal_dir": wal_dir, "upsert_sink": upsert, "scd2_sink": scd2}
 
-    singles = {
-        "poll_dir": lambda: _start_append(
-            polling_capture_stream(src(), include_soft_deletes=True), "sg_fam_poll"
-        ),
-        "trig_dir": lambda: _start_append(trigger_capture_stream(src()), "sg_fam_trig"),
-        "hourly_table": lambda: _start_complete(_hourly_agg(src())),
-        "sess_table": lambda: _start_complete(_sessionize_agg(src())),
-        "kmv_dir": lambda: _start_append(_kmv_stream(spark, sf_dir), "sg_fam_kmv"),
-        "enrich_dir": lambda: _start_append(
-            _enrich_stream(spark, sf_dir), "sg_fam_enrich"
-        ),
-    }
     return _run_streams(
-        [start_wal_fanout] + [_member(m, s) for m, s in singles.items()]
+        [
+            functools.partial(start_wal_fanout, log_capture_stream(src())),
+            _member(
+                "poll_dir",
+                _start_append,
+                polling_capture_stream(src(), include_soft_deletes=True),
+                "sg_fam_poll",
+            ),
+            _member(
+                "trig_dir", _start_append, trigger_capture_stream(src()), "sg_fam_trig"
+            ),
+            _member("hourly_table", _start_complete, _hourly_agg(src())),
+            _member("sess_table", _start_complete, _sessionize_agg(src())),
+            _member(
+                "kmv_dir", _start_append, _kmv_stream(spark, sf_dir), "sg_fam_kmv"
+            ),
+            _member(
+                "enrich_dir",
+                _start_append,
+                _enrich_stream(spark, sf_dir),
+                "sg_fam_enrich",
+            ),
+        ]
     )
 
 
@@ -390,8 +283,8 @@ def _commit_family(spark: SparkSession, sf_dir: str) -> dict:
     chunks = _commit_chunks(spark, sf_dir)
 
     def start():
-        src = _read_chunks(
-            spark, COMMIT_EVENT_SCHEMA, chunks, _MAX_FILES_PER_TRIGGER
+        src = read_chunks(
+            spark, COMMIT_EVENT_SCHEMA, chunks, runtime.MAX_FILES_PER_TRIGGER
         )
         gated = gate_on_commit_floor(
             src, tick_ms=_GATE_TICK_MS, delay=f"{_GATE_DELAY_MS} milliseconds"
@@ -423,48 +316,45 @@ def _commit_family(spark: SparkSession, sf_dir: str) -> dict:
 def _solo_family(spark: SparkSession, sf_dir: str) -> dict:
     """Streams on private feeds: nothing to share but the harness pass —
     started together so the engine drives them concurrently."""
-    members = {
-        "txn_dir": lambda: _start_append(_txn_stream(spark, sf_dir), "sg_fam_txn"),
-        "dedup_dir": lambda: _start_append(_dedup_stream(spark, sf_dir), "sg_fam_dedup"),
-        "rate_dir": lambda: _start_append(_rate_stream(spark, sf_dir), "sg_fam_rate"),
-        "docs_dedup_dir": lambda: _start_append(
-            _docs_dedup_stream(spark, sf_dir), "sg_fam_docsdedup"
-        ),
-        "index_sink": lambda: _start_store(
-            _IndexSink,
-            "index",
-            _read_chunks(
-                spark,
-                "doc_id BIGINT, norm STRING",
-                _doc_text_chunks(spark, sf_dir),
-                _MAX_FILES_PER_TRIGGER,
+    mfpt = runtime.MAX_FILES_PER_TRIGGER
+    return _run_streams(
+        [
+            _member("txn_dir", _start_append, _txn_stream(spark, sf_dir), "sg_fam_txn"),
+            _member(
+                "dedup_dir", _start_append, _dedup_stream(spark, sf_dir), "sg_fam_dedup"
             ),
-        ),
-        "erasure_sink": lambda: _start_store(
-            UpsertSink,
-            "erasure",
-            log_capture_stream(
-                _read_chunks(
+            _member(
+                "rate_dir", _start_append, _rate_stream(spark, sf_dir), "sg_fam_rate"
+            ),
+            _member(
+                "docs_dedup_dir",
+                _start_append,
+                _docs_dedup_stream(spark, sf_dir),
+                "sg_fam_docsdedup",
+            ),
+            _member(
+                "index_sink",
+                _start_store,
+                _IndexSink,
+                "index",
+                read_chunks(
                     spark,
-                    OPS_SCHEMA,
-                    _erasure_chunks(spark, sf_dir),
-                    _MAX_FILES_PER_TRIGGER,
-                )
+                    "doc_id BIGINT, norm STRING",
+                    _doc_text_chunks(spark, sf_dir),
+                    mfpt,
+                ),
             ),
-        ),
-    }
-    # pre-stage every member's chunk feed, so each start only starts its
-    # query (starts run one after another on this thread)
-    for stage in (
-        _txn_chunks,
-        _dup_chunks,
-        _rate_chunks,
-        _docs_chunks,
-        _doc_text_chunks,
-        _erasure_chunks,
-    ):
-        stage(spark, sf_dir)
-    return _run_streams([_member(m, s) for m, s in members.items()])
+            _member(
+                "erasure_sink",
+                _start_store,
+                UpsertSink,
+                "erasure",
+                log_capture_stream(
+                    read_chunks(spark, OPS_SCHEMA, _erasure_chunks(spark, sf_dir), mfpt)
+                ),
+            ),
+        ]
+    )
 
 
 _FAMILY_RUNNERS = {
@@ -716,11 +606,11 @@ _GATE_TICK_MS = 60_000
 _GATE_DELAY_MS = 3_600_000  # >> the bus's max commit-vs-arrival inversion
 
 
-@_chunk_feed("commit")
-def _commit_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the drop-free bus feed as 3 arrival-ordered chunk files (split
-    on ``delivery_ts``, so drift-late events cross micro-batch boundaries)
-    plus a heartbeat chunk that drives the final watermark past every real
+@chunk_feed("commit", order=["delivery_ts", "lsn"], drop=["delivery_ts"], tail=True)
+def _commit_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The drop-free bus feed as arrival-ordered chunks (split on
+    ``delivery_ts``, so drift-late events cross micro-batch boundaries),
+    plus a heartbeat tail that drives the final watermark past every real
     commit window. The heartbeat's own window stays withheld forever — only
     real transactions are ever released."""
     from lets_talk_cdc_change_feed_playground_spark.operators import playground as pg
@@ -736,36 +626,20 @@ def _commit_chunks(spark: SparkSession, sf_dir: str) -> str:
         F.col("event_type").alias("payload"),
         "delivery_ts",
     )
-    max_commit = ev.agg(F.max("commit_ts")).first()[0]
-    cuts = ev.approxQuantile("delivery_ts", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        ev.withColumn("__chunk", _chunk_id(F.col("delivery_ts"), cuts)),
-        _N_CHUNKS,
-        "sg_commit_chunks_",
-        ["delivery_ts", "lsn"],
-        drop=["delivery_ts"],
+    heartbeat = ev.agg(
+        (F.max("commit_ts") + _GATE_DELAY_MS + 2 * _GATE_TICK_MS).alias("commit_ts")
+    ).select(
+        F.lit(_HB_TX).alias("tx_id"),
+        F.lit(0).alias("tx_index"),
+        "commit_ts",
+        F.lit(-1).cast("long").alias("lsn"),
+        F.lit("-").alias("pk"),
+        F.lit("c").alias("op"),
+        F.lit("-").alias("payload"),
+        F.lit(None).cast("long").alias("delivery_ts"),
+        F.lit(runtime.N_CHUNKS).alias("__chunk"),
     )
-    out = os.path.dirname(flat)
-    hb = local_df(spark,
-        [
-            (
-                _HB_TX,
-                0,
-                int(max_commit) + _GATE_DELAY_MS + 2 * _GATE_TICK_MS,
-                -1,
-                "-",
-                "c",
-                "-",
-            )
-        ],
-        "tx_id string, tx_index int, commit_ts long, lsn long, pk string, "
-        "op string, payload string",
-    )
-    hdir = os.path.join(out, "hb")
-    hb.coalesce(1).write.parquet(hdir)
-    part = next(f for f in os.listdir(hdir) if f.endswith(".parquet"))
-    _pin_chunk(os.path.join(hdir, part), os.path.join(flat, "99.parquet"), 99)
-    return flat
+    return quantile_chunks(ev, "delivery_ts").unionByName(heartbeat)
 
 
 def stream_apply_on_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -927,10 +801,10 @@ ORDER BY pk
     )
 
 
-@_chunk_feed("docs")
-def _docs_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage ``documents`` as 3 doc_id-range chunk files (hash precomputed
-    JVM-side) — the arrival order of an ingestion stream."""
+@chunk_feed("docs", order=["doc_id"])
+def _docs_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``documents`` as doc_id-range chunks (hash precomputed JVM-side) —
+    the arrival order of an ingestion stream."""
     from lets_talk_cdc_change_feed_playground_spark.sources.testdata import load_table
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -939,14 +813,7 @@ def _docs_chunks(spark: SparkSession, sf_dir: str) -> str:
             F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
         ).alias("content_hash"),
     )
-    cuts = d.approxQuantile("doc_id", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        d.withColumn("__chunk", _chunk_id(F.col("doc_id"), cuts)),
-        _N_CHUNKS,
-        "sg_docs_chunks_",
-        ["doc_id"],
-    )
-    return flat
+    return quantile_chunks(d, "doc_id")
 
 
 def _docs_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -979,8 +846,8 @@ def _docs_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             [pd.DataFrame({"content_hash": [key[0]], "keeper_doc_id": [keeper]})]
         )
 
-    src = _read_chunks(
-        spark, in_schema, _docs_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+    src = read_chunks(
+        spark, in_schema, _docs_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
     )
     return src.groupBy("content_hash").applyInPandasWithState(
         first_seen,
@@ -1018,11 +885,11 @@ ORDER BY content_hash
 """
 
 
-@_chunk_feed("txn")
-def _txn_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the drop-free bus as 3 *arrival-ordered* chunk files shaped for
-    the A5 assembler (tx metadata + payload).  Splitting on ``delivery_ts``
-    means drift-late transactions straddle micro-batch boundaries — the
+@chunk_feed("txn", order=["delivery_ts", "lsn"], drop=["delivery_ts", "lsn"])
+def _txn_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The drop-free bus as *arrival-ordered* chunks shaped for the A5
+    assembler (tx metadata + payload).  Splitting on ``delivery_ts`` means
+    drift-late transactions straddle micro-batch boundaries — the
     assembler's keyed buffer must carry them across batches."""
     from lets_talk_cdc_change_feed_playground_spark.operators import playground as pg
 
@@ -1038,15 +905,7 @@ def _txn_chunks(spark: SparkSession, sf_dir: str) -> str:
         "delivery_ts",
         "lsn",
     )
-    cuts = ev.approxQuantile("delivery_ts", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        ev.withColumn("__chunk", _chunk_id(F.col("delivery_ts"), cuts)),
-        _N_CHUNKS,
-        "sg_txn_chunks_",
-        ["delivery_ts", "lsn"],
-        drop=["delivery_ts", "lsn"],
-    )
-    return flat
+    return quantile_chunks(ev, "delivery_ts")
 
 
 def _txn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,8 +914,11 @@ def _txn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         assemble_transactions_bucketed,
     )
 
-    src = _read_chunks(
-        spark, TXN_EVENT_SCHEMA, _txn_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+    src = read_chunks(
+        spark,
+        TXN_EVENT_SCHEMA,
+        _txn_chunks(spark, sf_dir),
+        runtime.MAX_FILES_PER_TRIGGER,
     )
     return assemble_transactions_bucketed(src)
 
@@ -1064,7 +926,8 @@ def _txn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_txn_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 as a judged streaming job: the drop-free bus replays in *arrival*
     order (drift-late transactions cross micro-batch boundaries) through the
-    keyed-state assembler (:func:`..streaming.txn.assemble_transactions`) —
+    keyed-state assembler
+    (:func:`..streaming.txn.assemble_transactions_bucketed`) —
     a transaction's events surface only once its buffer is complete, in
     index order, never torn.  With no drops every transaction eventually
     completes, so the released set is chunking-independent and the oracle is
@@ -1101,11 +964,10 @@ ORDER BY tx_id, tx_index
 _BP_CHUNKS = 5
 
 
-@_chunk_feed("bp", lambda: _BP_CHUNKS)
-def _equal_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the ops feed as ``_BP_CHUNKS`` *equal-row-count* parquet files
-    (the per-trigger intake quantum), mtime-spaced so the file source's
-    modification-time ordering replays them one per micro-batch."""
+@chunk_feed("bp", order=["rn"], drop=["rn"], count=lambda spark, sf_dir: _BP_CHUNKS)
+def _equal_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ops feed as ``_BP_CHUNKS`` *equal-row-count* chunks (the
+    per-trigger intake quantum), replayed one per micro-batch."""
     from lets_talk_cdc_change_feed_playground_spark.functions.sequence import (
         with_global_seq,
     )
@@ -1113,16 +975,8 @@ def _equal_chunks(spark: SparkSession, sf_dir: str) -> str:
     ops = with_global_seq(
         ops_feed(spark, sf_dir), F.expr("t div 3600000"), ["t", "seq"], out_col="rn"
     )
-    n = ops.count()
-    cap = (n + _BP_CHUNKS - 1) // _BP_CHUNKS
-    flat = _write_split_chunks(
-        ops.withColumn("__chunk", F.expr(f"cast((rn - 1) div {cap} as int)")),
-        _BP_CHUNKS,
-        "sg_bp_chunks_",
-        ["rn"],
-        drop=["rn"],
-    )
-    return flat
+    cap = (ops.count() + _BP_CHUNKS - 1) // _BP_CHUNKS
+    return ops.withColumn("__chunk", F.expr(f"cast((rn - 1) div {cap} as int)"))
 
 
 def stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1141,10 +995,10 @@ def stream_backpressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     def audit(batch_df: DataFrame, batch_id: int) -> None:
         counts.append((batch_id, batch_df.count()))
 
-    # pinned to 1, NOT _MAX_FILES_PER_TRIGGER: one equal-row chunk per
+    # pinned to 1, NOT runtime.MAX_FILES_PER_TRIGGER: one equal-row chunk per
     # trigger IS the backpressure cap being judged (the oracle derives the
     # timeline from that quantum) — an execution knob elsewhere, semantics here
-    src = _read_chunks(spark, OPS_SCHEMA, path, 1)
+    src = read_chunks(spark, OPS_SCHEMA, path, 1)
     q = (
         src.writeStream.outputMode("append")
         .option("checkpointLocation", scratch_dir(spark, "sg_bp_ckpt_"))
@@ -1281,33 +1135,23 @@ def _ack_ms_col():
     ) % _ACK_SPREAD_MS
 
 
-@_chunk_feed("acks")
-def _ack_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the delivery-ack stream: one ack per op at ``t + latency``,
-    chunked by ACK time against the same cut points as the ops chunks — so
-    acks for each chunk's tail ops arrive one micro-batch AFTER the op and
-    the join must hold those ops in state across the batch boundary."""
+@chunk_feed("acks", order=["ack_ms", "ack_seq"])
+def _ack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The delivery-ack stream: one ack per op at ``t + latency``, chunked
+    by ACK time against the same cut points as the ops chunks — so acks for
+    each chunk's tail ops arrive one micro-batch AFTER the op and the join
+    must hold those ops in state across the batch boundary."""
     ops = ops_feed(spark, sf_dir)
-    qs = _split_qs()
-    cuts = ops.approxQuantile("t", qs, 0.001)
-    acks = ops.select(
-        F.col("seq").alias("ack_seq"), _ack_ms_col().alias("ack_ms")
-    )
-    flat = _write_split_chunks(
-        acks.withColumn("__chunk", _chunk_id(F.col("ack_ms"), cuts)),
-        _N_CHUNKS,
-        "sg_ack_chunks_",
-        ["ack_ms", "ack_seq"],
-    )
-    return flat
+    acks = ops.select(F.col("seq").alias("ack_seq"), _ack_ms_col().alias("ack_ms"))
+    return quantile_chunks(acks, "ack_ms", cuts_from=(ops, "t"))
 
 
 def _enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
     ops = (
-        _read_chunks(
-            spark, OPS_SCHEMA, _ops_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+        read_chunks(
+            spark, OPS_SCHEMA, _ops_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
         )
         .withColumn("ts", F.timestamp_millis(F.col("t")))
         .withWatermark("ts", "10 seconds")
@@ -1316,8 +1160,8 @@ def _enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("ack_seq", LongType()), StructField("ack_ms", LongType())]
     )
     acks = (
-        _read_chunks(
-            spark, ack_schema, _ack_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+        read_chunks(
+            spark, ack_schema, _ack_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
         )
         .withColumn("ack_ts", F.timestamp_millis(F.col("ack_ms")))
         .withWatermark("ack_ts", "10 seconds")
@@ -1377,42 +1221,37 @@ ORDER BY seq
 # ---------------------------------------------------------------------------
 
 
-@_chunk_feed("dups")
-def _dup_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the at-least-once delivery stream: every op once in its own
-    time chunk, plus a re-delivery of the outbox-duplicated ops (same
-    payload, same event time) written into the NEXT chunk — cross-batch
-    duplicates, the case in-batch ``dropDuplicates`` cannot fix."""
+@chunk_feed("dups", order=["t", "seq"])
+def _dup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The at-least-once delivery stream: every op once in its own time
+    chunk, plus a re-delivery of the outbox-duplicated ops (same payload,
+    same event time) in the NEXT chunk — cross-batch duplicates, the case
+    in-batch ``dropDuplicates`` cannot fix."""
     from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import hash31
     from lets_talk_cdc_change_feed_playground_spark.operators.reliability_queries import (
         OUTBOX_DUP_MOD,
     )
 
-    ops = ops_feed(spark, sf_dir)
+    n = runtime.N_CHUNKS
+    base = quantile_chunks(ops_feed(spark, sf_dir), "t")
     dup_cond = (
         hash31(F.concat(F.col("pk"), F.lit(":"), F.col("seq").cast("string")))
         % OUTBOX_DUP_MOD
         == 0
     )
-    cuts = ops.approxQuantile("t", _split_qs(), 0.001)
-    cid = _chunk_id(F.col("t"), cuts)
-    base = ops.withColumn("__chunk", cid)
     # the outbox-duplicated ops re-deliver into the NEXT chunk (cross-batch
     # duplicates); duplicates of the last chunk have no next chunk — except
     # in the single-chunk degenerate case, where they re-deliver in place
-    dups = ops.filter(dup_cond).withColumn(
-        "__chunk", cid + (0 if _N_CHUNKS == 1 else 1)
-    ).filter(F.col("__chunk") <= _N_CHUNKS - 1)
-    flat = _write_split_chunks(
-        base.unionByName(dups), _N_CHUNKS, "sg_dup_chunks_", ["t", "seq"]
-    )
-    return flat
+    dups = base.filter(dup_cond).withColumn(
+        "__chunk", F.col("__chunk") + (0 if n == 1 else 1)
+    ).filter(F.col("__chunk") <= n - 1)
+    return base.unionByName(dups)
 
 
 def _dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
-        _read_chunks(
-            spark, OPS_SCHEMA, _dup_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+        read_chunks(
+            spark, OPS_SCHEMA, _dup_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
         )
         .withColumn("ts", F.timestamp_millis(F.col("t")))
         .withWatermark("ts", "20 days")
@@ -1502,8 +1341,8 @@ def _kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"day": day, "version": version + 1, "hashes_json": _json.dumps(keep)}]
         )
 
-    src = _read_chunks(
-        spark, OPS_SCHEMA, _ops_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+    src = read_chunks(
+        spark, OPS_SCHEMA, _ops_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
     )
     keyed = src.select(
         F.expr(f"t div {DAY_MS}").alias("day"),
@@ -1569,13 +1408,13 @@ def _stream_kmv_sql() -> str:
     return _KMV_SQL
 
 
-@_chunk_feed("rate")
-def _rate_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the delivered bus events as 3 chunk files split on
-    ``delivery_ts`` — per-partition delivery order is preserved across
-    micro-batch boundaries (every chunk holds a contiguous delivery-time
-    range), the property the rate-limit recurrence needs, and the same one a
-    keyed Kafka topic gives per partition."""
+@chunk_feed("rate", order=["delivery_ts", "lsn"])
+def _rate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The delivered bus events as chunks split on ``delivery_ts`` —
+    per-partition delivery order is preserved across micro-batch boundaries
+    (every chunk holds a contiguous delivery-time range), the property the
+    rate-limit recurrence needs, and the same one a keyed Kafka topic gives
+    per partition."""
     from lets_talk_cdc_change_feed_playground_spark.operators import playground as pg
 
     ev = (
@@ -1583,14 +1422,7 @@ def _rate_chunks(spark: SparkSession, sf_dir: str) -> str:
         .filter(~F.col("dropped"))
         .select("lsn", "txn_id", "pk", "partition", "delivery_ts")
     )
-    cuts = ev.approxQuantile("delivery_ts", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        ev.withColumn("__chunk", _chunk_id(F.col("delivery_ts"), cuts)),
-        _N_CHUNKS,
-        "sg_rate_chunks_",
-        ["delivery_ts", "lsn"],
-    )
-    return flat
+    return quantile_chunks(ev, "delivery_ts")
 
 
 _RATE_PER_TICK = 8  # service slots per tick — matches the batch A6 query
@@ -1676,8 +1508,8 @@ def _rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((int(u),))
         yield pd.DataFrame(out, columns=cols)
 
-    src = _read_chunks(
-        spark, in_schema, _rate_chunks(spark, sf_dir), _MAX_FILES_PER_TRIGGER
+    src = read_chunks(
+        spark, in_schema, _rate_chunks(spark, sf_dir), runtime.MAX_FILES_PER_TRIGGER
     )
     return src.groupBy("partition").applyInPandasWithState(
         drain, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
@@ -1718,22 +1550,21 @@ def _ivm_feed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list, list]:
     )
 
 
-@_chunk_feed("ivm", count=lambda: None)
-def _ivm_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage one chunk file per maintenance epoch, oldest-first (chunk id =
-    the epoch's index).  maintain()'s re-delivery guard is keyed on epoch
-    alone, which is only sound because an epoch never straddles two staged
-    files (half an epoch in a later trigger would be silently skipped) —
-    ``_write_split_chunks`` asserts exactly one file per chunk."""
+@chunk_feed(
+    "ivm",
+    order=["t", "seq"],
+    count=lambda spark, sf_dir: len(_ivm_feed(spark, sf_dir)[1]),
+)
+def _ivm_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One chunk per maintenance epoch, oldest first (chunk id = the
+    epoch's index).  maintain()'s re-delivery guard is keyed on epoch alone,
+    which is only sound because an epoch never straddles two staged files
+    (half an epoch in a later trigger would be silently skipped) — the
+    chunk writer asserts exactly one file per chunk."""
     opse, epochs, _types = _ivm_feed(spark, sf_dir)
     epoch_list = F.array(*[F.lit(int(e)) for e in epochs])
-    return _write_split_chunks(
-        opse.withColumn(
-            "__chunk", (F.array_position(epoch_list, F.col("epoch")) - 1).cast("int")
-        ),
-        len(epochs),
-        "sg_ivm_chunks_",
-        ["t", "seq"],
+    return opse.withColumn(
+        "__chunk", (F.array_position(epoch_list, F.col("epoch")) - 1).cast("int")
     )
 
 
@@ -1971,7 +1802,7 @@ def stream_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the per-batch state joins touch keyed state only, so they run in the
     # stream session at its partition count
-    src = _read_chunks(spark, opse.schema, chunks, _IVM_FILES_PER_TRIGGER)
+    src = read_chunks(spark, opse.schema, chunks, _IVM_FILES_PER_TRIGGER)
     q = (
         src.writeStream.outputMode("append")
         .option("checkpointLocation", scratch_dir(spark, "sg_ivm_ckpt_"))
@@ -2252,23 +2083,16 @@ ORACLE["stream_scd2"] = _stream_scd2_sql()
 # ---------------------------------------------------------------------------
 
 
-@_chunk_feed("doctext")
-def _doc_text_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage documents (id + normalized text) as 3 arrival chunks."""
+@chunk_feed("doctext", order=["doc_id"])
+def _doc_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents (id + normalized text) as doc_id-range arrival chunks."""
     from lets_talk_cdc_change_feed_playground_spark.sources.testdata import load_table
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))).alias("norm"),
     )
-    cuts = d.approxQuantile("doc_id", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        d.withColumn("__chunk", _chunk_id(F.col("doc_id"), cuts)),
-        _N_CHUNKS,
-        "sg_doctext_chunks_",
-        ["doc_id"],
-    )
-    return flat
+    return quantile_chunks(d, "doc_id")
 
 
 class _IndexSink(VersionedStore):
@@ -2348,18 +2172,16 @@ ORACLE["stream_index_maintenance"] = _stream_index_sql()
 # ---------------------------------------------------------------------------
 
 
-@_chunk_feed("erasure")
-def _erasure_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the erased feed (pre-request ops + erasure tombstones, the
-    same modified feed as the batch ``cdc_gdpr_erasure``) as time-split
-    chunks; the tombstones land in the final chunk."""
+@chunk_feed("erasure", order=["t", "seq"], tail=True)
+def _erasure_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The erased feed (pre-request ops + erasure tombstones, the same
+    modified feed as the batch ``cdc_gdpr_erasure``) as time-split chunks,
+    cut at quantiles of the pre-request ops; the tombstones arrive as the
+    tail, their own final micro-batch."""
     from lets_talk_cdc_change_feed_playground_spark.operators.governance_queries import (
         GDPR_MOD,
     )
-    from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
-        hash31,
-        ops_feed,
-    )
+    from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import hash31
 
     ops = ops_feed(spark, sf_dir)
     mx = ops.agg(
@@ -2382,6 +2204,7 @@ def _erasure_chunks(spark: SparkSession, sf_dir: str) -> str:
         F.lit(None).cast("string").alias("event_type"),
         F.lit(None).cast("double").alias("value"),
         F.lit(None).cast("string").alias("props"),
+        F.lit(runtime.N_CHUNKS).alias("__chunk"),
     )
     cols = ["seq", "t", "pk", "op", "event_type", "value", "props"]
     req_flag = requested.withColumn("__req", F.lit(True))
@@ -2391,20 +2214,8 @@ def _erasure_chunks(spark: SparkSession, sf_dir: str) -> str:
         .select(*cols)
     )
     t_req = mx.select("t_req").first()["t_req"]
-    cuts = kept.filter(F.col("t") <= t_req).approxQuantile("t", _split_qs(), 0.001)
-    flat = _write_split_chunks(
-        kept.withColumn("__chunk", _chunk_id(F.col("t"), cuts)),
-        _N_CHUNKS,
-        "sg_erasure_chunks_",
-        ["t", "seq"],
-    )
-    # erasure tombstones arrive as their own final micro-batch
-    out = os.path.dirname(flat)
-    tdir = os.path.join(out, "t")
-    tomb.coalesce(1).write.parquet(tdir)
-    part = next(f for f in os.listdir(tdir) if f.endswith(".parquet"))
-    _pin_chunk(os.path.join(tdir, part), os.path.join(flat, "99.parquet"), 99)
-    return flat
+    pre = kept.filter(F.col("t") <= t_req)
+    return quantile_chunks(kept, "t", cuts_from=(pre, "t")).unionByName(tomb)
 
 
 def stream_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2473,26 +2284,6 @@ ORACLE["stream_erasure_propagation"] = _stream_erasure_sql()
 # Streaming schema-change capture (C4-live) — streaming/schema_stream.py
 # ---------------------------------------------------------------------------
 
-from lets_talk_cdc_change_feed_playground_spark.streaming.schema_stream import (  # noqa: E402
-    STREAM_SCHEMA_EVOLUTION_SQL,
-    evolving_ops,
-    stream_schema_evolution,
-)
-
-
-@_chunk_feed("schema_evo")
-def _evolving_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the evolving-schema ops feed as time-split chunk files."""
-    ops = evolving_ops(spark, sf_dir)
-    cuts = ops.approxQuantile("t", _split_qs(), 0.001)
-    return _write_split_chunks(
-        ops.withColumn("__chunk", _chunk_id(F.col("t"), cuts)),
-        _N_CHUNKS,
-        "sg_schema_evo_",
-        ["t", "seq"],
-    )
-
-
 QUERIES["stream_schema_evolution"] = stream_schema_evolution
 ORACLE["stream_schema_evolution"] = STREAM_SCHEMA_EVOLUTION_SQL
 
@@ -2549,7 +2340,7 @@ def cdc_restart_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = scratch_dir(spark, "sg_restart_ckpt_")
 
     def start(files_per_trigger: int | None):
-        src = _read_chunks(spark, OPS_SCHEMA, chunks, files_per_trigger)
+        src = read_chunks(spark, OPS_SCHEMA, chunks, files_per_trigger)
         return (
             log_capture_stream(src)
             .writeStream.outputMode("append")

@@ -48,14 +48,14 @@ def test_sink_schema_gains_columns_mid_stream(spark, tmp_path, monkeypatch):
     import time
 
     from lets_talk_cdc_change_feed_playground_spark.streaming import (
+        runtime,
         schema_stream,
-        stream_queries,
     )
 
     # this test's premise is chunk boundaries == batch boundaries (the ALTER
     # must land mid-stream), so pin one staged file per trigger regardless
     # of the judged default granularity
-    monkeypatch.setattr(stream_queries, "_MAX_FILES_PER_TRIGGER", 1)
+    monkeypatch.setattr(runtime, "MAX_FILES_PER_TRIGGER", 1)
 
     chunk1 = [
         ("users", "p1", 100, 0, "update", {"name": "ann"}),

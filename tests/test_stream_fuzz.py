@@ -20,8 +20,8 @@ expected timeline arithmetically, exactly as its oracle does.
 
 ``stream_ivm_join`` stages one chunk per maintenance EPOCH, so its batching
 knob is files-per-trigger only: its cap ``_IVM_FILES_PER_TRIGGER`` is fuzzed
-together with ``_MAX_FILES_PER_TRIGGER``.  ``cdc_restart_convergence`` pins
-its own trigger plan to place the crash and is not fuzzed.
+together with ``runtime.MAX_FILES_PER_TRIGGER``.  ``cdc_restart_convergence``
+pins its own trigger plan to place the crash and is not fuzzed.
 
 Each query runs the judged path itself: family members assemble from their
 family's one shared pass (fan-out, persist and all).  The family's registry
@@ -36,7 +36,7 @@ from pathlib import Path
 
 import pytest
 
-from lets_talk_cdc_change_feed_playground_spark.streaming import stream_queries
+from lets_talk_cdc_change_feed_playground_spark.streaming import runtime, stream_queries
 
 # (n_chunks, max_files_per_trigger): the base is the 1-file-per-trigger
 # extreme (3, 1).  3×2 is the JUDGED default (two triggers over three
@@ -79,12 +79,17 @@ def _df_hash(df) -> str:
 
 def _run(spark, sf_dir, name, n_chunks, mfpt, monkeypatch):
     with monkeypatch.context() as m:
-        m.setattr(stream_queries, "_N_CHUNKS", n_chunks)
-        m.setattr(stream_queries, "_MAX_FILES_PER_TRIGGER", mfpt)
+        m.setattr(runtime, "N_CHUNKS", n_chunks)
+        m.setattr(runtime, "MAX_FILES_PER_TRIGGER", mfpt)
         m.setattr(stream_queries, "_IVM_FILES_PER_TRIGGER", mfpt)
         # chunk feeds and family passes are keyed by these knobs, so each
         # variant stages and runs its own beside the judged ones
-        return _df_hash(stream_queries.QUERIES[name](spark, sf_dir))
+        got = _df_hash(stream_queries.QUERIES[name](spark, sf_dir))
+        # the variant's feed really has n_chunks files: a patch on a module
+        # that no longer owns the knob would re-run the judged default
+        ops = Path(stream_queries._ops_chunks(spark, sf_dir))
+        assert len(list(ops.glob("*.parquet"))) == n_chunks
+        return got
 
 
 @pytest.mark.parametrize("name", INVARIANT_QUERIES)
@@ -126,15 +131,35 @@ def test_stream_backpressure_cap_sweep(spark, sf_dir, bp_chunks, monkeypatch):
     assert rows[-1]["backlog_after"] == 0
 
 
-def test_staged_chunk_files_are_byte_identical(spark, sf_dir):
-    """Restaging a feed writes the same bytes: each chunk is sorted on the
-    column its cut points split before it is written, so the shuffle's
-    delivery order never reaches the files."""
+# the rows of each feed's tail chunk (a feed without one has no entry)
+TAILS = {
+    "_commit_chunks": "tx_id = '__heartbeat__'",
+    "_erasure_chunks": "op = 'delete'",
+}
 
-    def stage() -> dict[str, bytes]:
-        flat = Path(stream_queries._ops_chunks.__wrapped__(spark, sf_dir))
-        return {f.name: f.read_bytes() for f in sorted(flat.iterdir())}
 
-    first = stage()
-    assert list(first) == [f"{i:02d}.parquet" for i in range(stream_queries._N_CHUNKS)]
-    assert stage() == first
+@pytest.mark.parametrize("feed", ["_ops_chunks", *TAILS])
+def test_staged_chunk_files_are_byte_identical(spark, sf_dir, feed):
+    """A feed is one file per chunk, ``00.parquet`` onwards with no gap and
+    its tail (heartbeat, tombstones) as the last file, and the file source's
+    mtime order is the name order.  Restaging a feed writes the same bytes:
+    each chunk is sorted on the column its cut points split before it is
+    written, so the shuffle's delivery order never reaches the files."""
+    stager = getattr(stream_queries, feed).__wrapped__
+    tail = TAILS.get(feed)
+
+    def stage() -> tuple[Path, dict[str, bytes]]:
+        flat = Path(stager(spark, sf_dir))
+        files = sorted(flat.iterdir())
+        mtimes = [f.stat().st_mtime for f in files]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+        return flat, {f.name: f.read_bytes() for f in files}
+
+    flat, first = stage()
+    n_files = runtime.N_CHUNKS + (tail is not None)
+    assert list(first) == [f"{i:02d}.parquet" for i in range(n_files)]
+    if tail is not None:
+        last = spark.read.parquet(str(flat / f"{n_files - 1:02d}.parquet"))
+        assert last.count() > 0
+        assert last.filter(f"NOT ({tail})").count() == 0
+    assert stage()[1] == first

@@ -581,6 +581,7 @@ def test_streams_run_in_the_stream_session(spark, tmp_path):
     )
     from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (
         STREAM_PARTS,
+        read_chunks,
     )
 
     key = "spark.sql.shuffle.partitions"
@@ -593,7 +594,7 @@ def test_streams_run_in_the_stream_session(spark, tmp_path):
         seen.append((spark.conf.get(key), bdf.sparkSession.conf.get(key)))
 
     def start():
-        src = SQ._read_chunks(spark, "id LONG", feed, 1)
+        src = read_chunks(spark, "id LONG", feed, 1)
         return src.writeStream.foreachBatch(record).start(), {}
 
     SQ._run_streams([start])
@@ -615,6 +616,9 @@ def test_streams_checkpoint_under_the_session_root(spark, sf_dir, monkeypatch):
     from lets_talk_cdc_change_feed_playground_spark.streaming import (
         stream_queries as SQ,
     )
+    from lets_talk_cdc_change_feed_playground_spark.streaming.runtime import (
+        read_chunks,
+    )
 
     root = os.path.dirname(scratch_dir(spark, "sg_probe_"))
     options: dict[int, dict] = {}
@@ -635,7 +639,7 @@ def test_streams_checkpoint_under_the_session_root(spark, sf_dir, monkeypatch):
     chunks = SQ._ops_chunks(spark, sf_dir)
     for agg in (SQ._hourly_agg, SQ._sessionize_agg):
         q, _table = SQ._start_complete(
-            agg(SQ._read_chunks(spark, OPS_SCHEMA, chunks, None))
+            agg(read_chunks(spark, OPS_SCHEMA, chunks, None))
         )
         try:
             q.processAllAvailable()
