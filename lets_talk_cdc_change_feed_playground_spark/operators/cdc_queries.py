@@ -266,16 +266,19 @@ def _expected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lane_diff(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
-    """V1 diff frame for one lane, materialized once per session (consumed by
-    the diff listing, top-k lag, and verdict-style aggregates)."""
+    """V1 diff frame for one lane with each row's V2 ``inverted`` flag,
+    materialized once per session (consumed by the diff listing, top-k lag
+    and the verdict, which then reduces it with no window of its own)."""
     from lets_talk_cdc_change_feed_playground_spark.operators.shared import shared_df
 
     return shared_df(
         spark,
         ("lane_diff", sf_dir, method),
-        lambda: diffs.lane_diff(
-            _expected(spark, sf_dir),
-            _lane_actual(spark, sf_dir, method),
+        lambda: diffs.mark_inversions(
+            diffs.lane_diff(
+                _expected(spark, sf_dir),
+                _lane_actual(spark, sf_dir, method),
+            )
         ),
     )
 
@@ -306,86 +309,29 @@ def cdc_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_lane_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lane_diff(spark, sf_dir, "polling")
+    return _lane_diff(spark, sf_dir, "polling").drop("inverted")
 
 
 def cdc_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V7 — per-lane pipeline verdict over all three lanes.
 
-    Consumes the session-cached V1 diff frames (one per lane — the same
-    frames the diff listing and top-k lag queries read), unions them with a
-    lane tag, and reduces to per-lane verdict aggregates in ONE fused
-    bucket pass: the full diff union is shuffled ONCE on
-    (method, __bucket); the inversion running max (the bucketed two-phase
-    pattern) and every counting aggregate (missing/extra/max-lag/bucket
-    max) ride that same clustering — the window's exchange is reused by
-    the bucket aggregation, so no per-aggregate re-shuffle (the reference
-    computes the verdict in one ``evaluate()`` pass,
-    ``harness/verifier/index.js:169-205``)."""
-    methods = ("log", "polling", "trigger")
+    Unions the session-staged V1 diff frames (one per lane — the same frames
+    the diff listing and top-k lag queries read), each carrying its rows' V2
+    ``inverted`` flag, and reduces them in ONE ``groupBy(method)``:
+    missing, extra, inversions and max lag (the reference computes the
+    verdict in one ``evaluate()`` pass,
+    ``harness/verifier/index.js:169-205``).  A warm call runs no job while
+    it builds and no window, broadcast or range-partition sample."""
     d = None
-    for m in methods:
+    for m in ("log", "polling", "trigger"):
         dm = _lane_diff(spark, sf_dir, m).withColumn("method", F.lit(m))
         d = dm if d is None else d.unionByName(dm)
-
-    from pyspark.sql import Window as W
-
-    matched = F.col("status") == "matched"
-    # missing rows carry a NULL actual_idx: they land in a NULL bucket and
-    # sort after every matched/extra row, so they never perturb the running
-    # max; extra rows carry a NULL expected_idx, so max() ignores them.
-    d2 = d.withColumn("__bucket", F.expr("actual_idx div 65536"))
-
-    # phase 1: per-(method, bucket) maxima — methods x ceil(max_idx/65536)
-    # rows, the exact frame the two-phase pattern broadcasts; the prefix
-    # max over it is a trivial ordered fold, done driver-side (collecting
-    # it costs the same driver/network envelope the broadcast did)
-    brows = (
-        d2.filter(matched)
-        .groupBy("method", "__bucket")
-        .agg(F.max("expected_idx").alias("m"))
-        .collect()
-    )
-    pf_rows: list[tuple] = []
-    run: dict[str, int] = {}
-    for r in sorted(brows, key=lambda r: (r["method"], r["__bucket"])):
-        pf_rows.append((r["method"], r["__bucket"], run.get(r["method"])))
-        prev = run.get(r["method"])
-        run[r["method"]] = r["m"] if prev is None else max(prev, r["m"])
-    from lets_talk_cdc_change_feed_playground_spark.operators.shared import local_df
-
-    pf = local_df(spark,
-        pf_rows, "method string, __bucket long, __prefix_max long"
-    )
-
-    # phase 2: ONE pass — the in-bucket running max rides the
-    # (method, bucket) window, the prefix max joins in as a broadcast
-    # literal, and every verdict aggregate (missing/extra/max-lag/
-    # inversions) reduces in a single groupBy(method) over that pass
-    win = (
-        W.partitionBy("method", "__bucket")
-        .orderBy(F.asc_nulls_last("actual_idx"))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = d2.withColumn(
-        "__local_max", F.max(F.when(matched, F.col("expected_idx"))).over(win)
-    )
-    inverted = matched & (
-        F.col("expected_idx")
-        < F.greatest(
-            F.coalesce(F.col("__local_max"), F.lit(-1)),
-            F.coalesce(F.col("__prefix_max"), F.lit(-1)),
-        )
-    )
-    return (
-        local.join(F.broadcast(pf), ["method", "__bucket"], "left")
-        .groupBy("method")
+    return metrics.sort_lanes(
+        d.groupBy("method")
         .agg(
             F.sum((F.col("status") == "missing").cast("int")).alias("missing"),
             F.sum((F.col("status") == "extra").cast("int")).alias("extra"),
-            F.coalesce(F.sum(inverted.cast("int")), F.lit(0)).alias(
-                "ordering_issues"
-            ),
+            F.sum(F.col("inverted").cast("int")).alias("ordering_issues"),
             F.coalesce(F.max("lag_ms"), F.lit(0)).alias("max_lag_ms"),
         )
         .select(
@@ -399,8 +345,8 @@ def cdc_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("extra") == 0)
                 & (F.col("ordering_issues") == 0)
             ).alias("pass"),
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 

@@ -5,10 +5,12 @@
   multisets per ``key = op::pk`` and matched pairwise (i-th with i-th);
   unpaired expected rows are *missing*, unpaired actual rows are *extra*;
   ``lag_ms = max(0, actual_time - expected_time)`` for matched pairs.
-  Spark shape: ``row_number`` per key on both sides, full outer join on
-  ``(key, rn)`` — one shuffle per side on the key.
+  Spark shape: each side's entries carry their occurrence number ``rn``
+  (``row_number`` per key, numbered where the entries are built, so the
+  session-staged expected side is numbered once for every lane), and a full
+  outer join on ``(key, rn)`` pairs them.
 - **V2 ordering inversions** (``sim/analysis/diff.ts:164-186``): walk matched
-  pairs in actual order and count pairs whose expected index falls below the
+  pairs in actual order and flag pairs whose expected index falls below the
   running max. (An issue row's index is strictly below the running max, so it
   can never raise it — the reference's "only advance on clean rows" loop is
   exactly a running-max window.)
@@ -49,12 +51,9 @@ def expected_entries(ops: DataFrame) -> DataFrame:
     df = with_global_seq(
         ops, F.expr(f"t div {_IDX_BUCKET_MS}"), ["t", "seq"], "idx", start=0
     )
-    return df.select(
-        code.alias("op_code"),
-        "pk",
-        "idx",
-        F.col("t").alias("time"),
-    ).withColumn("key", F.concat_ws("::", "op_code", "pk"))
+    return _keyed(
+        df.select(code.alias("op_code"), "pk", "idx", F.col("t").alias("time"))
+    )
 
 
 def actual_entries(events: DataFrame, time_col: str, order_cols: list[str]) -> DataFrame:
@@ -65,30 +64,36 @@ def actual_entries(events: DataFrame, time_col: str, order_cols: list[str]) -> D
     df = with_global_seq(
         events, F.expr(f"{order_cols[0]} div {_IDX_BUCKET_MS}"), order_cols, "idx", start=0
     )
-    return df.select(
-        F.col("op").alias("op_code"),
-        "pk",
-        "idx",
-        F.col(time_col).alias("time"),
-    ).withColumn("key", F.concat_ws("::", "op_code", "pk"))
+    return _keyed(
+        df.select(F.col("op").alias("op_code"), "pk", "idx", F.col(time_col).alias("time"))
+    )
+
+
+def _keyed(entries: DataFrame) -> DataFrame:
+    """Key entries by ``op_code::pk`` and number each key's occurrences in
+    index order (``rn``): the i-th expected entry of a key pairs with its
+    i-th actual entry."""
+    keyed = entries.withColumn("key", F.concat_ws("::", "op_code", "pk"))
+    return keyed.withColumn(
+        "rn", F.row_number().over(W.partitionBy("key").orderBy("idx"))
+    )
 
 
 def lane_diff(expected: DataFrame, actual: DataFrame) -> DataFrame:
     """V1 — pairwise multiset match: one row per (key, occurrence)."""
-    we = W.partitionBy("key").orderBy("idx")
     exp = expected.select(
         "key",
+        "rn",
         "op_code",
         "pk",
-        F.row_number().over(we).alias("rn"),
         F.col("idx").alias("expected_idx"),
         F.col("time").alias("expected_time"),
     )
     act = actual.select(
         "key",
+        "rn",
         F.col("op_code").alias("a_op_code"),
         F.col("pk").alias("a_pk"),
-        F.row_number().over(we).alias("rn"),
         F.col("idx").alias("actual_idx"),
         F.col("time").alias("actual_time"),
     )
@@ -113,36 +118,45 @@ def lane_diff(expected: DataFrame, actual: DataFrame) -> DataFrame:
     )
 
 
-def ordering_inversions(diff: DataFrame, bucket_size: int = 65536) -> DataFrame:
-    """V2 — count of matched pairs whose expected index regresses below the
-    running max in actual order. Returns a single row ``(ordering_issues)``.
+def mark_inversions(diff: DataFrame, bucket_size: int = 65536) -> DataFrame:
+    """V2 — ``diff`` plus a boolean ``inverted``: true on each matched pair
+    whose expected index regresses below the running max of expected indexes
+    in actual order, false on every other row.
 
     The running max over the global actual order is computed in two phases
     (like :func:`..functions.sequence.with_global_seq`): a per-bucket running
     max plus a broadcast cumulative prefix over bucket maxima — no
-    unpartitioned data-sized window."""
-    matched = diff.filter(F.col("status") == "matched").withColumn(
-        "__bucket", F.expr(f"actual_idx div {bucket_size}")
-    )
+    unpartitioned data-sized window.  Extra rows carry a NULL
+    ``expected_idx`` and missing rows a NULL ``actual_idx`` (one NULL bucket
+    of their own), so neither moves the running max."""
+    matched = F.col("status") == "matched"
+    d = diff.withColumn("__bucket", F.expr(f"actual_idx div {bucket_size}"))
     win = (
         W.partitionBy("__bucket")
         .orderBy("actual_idx")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    local = matched.withColumn("__local_max", F.max("expected_idx").over(win))
-    bucket_max = matched.groupBy("__bucket").agg(
+    local = d.withColumn("__local_max", F.max("expected_idx").over(win))
+    bucket_max = d.filter(matched).groupBy("__bucket").agg(
         F.max("expected_idx").alias("__bmax")
     )
     prefix_w = W.orderBy("__bucket").rowsBetween(W.unboundedPreceding, -1)
     prefix = bucket_max.select(
         "__bucket", F.max("__bmax").over(prefix_w).alias("__prefix_max")
     )
-    j = local.join(F.broadcast(prefix), "__bucket")
     runmax = F.greatest(
         F.coalesce(F.col("__local_max"), F.lit(-1)),
         F.coalesce(F.col("__prefix_max"), F.lit(-1)),
     )
-    return j.select((F.col("expected_idx") < runmax).alias("inverted")).agg(
+    return local.join(F.broadcast(prefix), "__bucket", "left").select(
+        *diff.columns, (matched & (F.col("expected_idx") < runmax)).alias("inverted")
+    )
+
+
+def ordering_inversions(diff: DataFrame, bucket_size: int = 65536) -> DataFrame:
+    """V2 — count of inverted matched pairs (:func:`mark_inversions`).
+    Returns a single row ``(ordering_issues)``."""
+    return mark_inversions(diff, bucket_size).agg(
         F.coalesce(F.sum(F.col("inverted").cast("int")), F.lit(0)).alias(
             "ordering_issues"
         )

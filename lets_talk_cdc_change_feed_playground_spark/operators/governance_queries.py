@@ -43,6 +43,7 @@ from lets_talk_cdc_change_feed_playground_spark.operators.cdc_queries import (
     WAL_SQL,
     _with,
 )
+from lets_talk_cdc_change_feed_playground_spark.operators.metrics import sort_lanes
 from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
     hash31,
     hash31_sql,
@@ -280,7 +281,7 @@ def cdc_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("erasure_complete", F.col("resident_after") == 0)
     )
-    return (
+    return sort_lanes(
         lanes.crossJoin(F.broadcast(req_scalars))
         .select(
             "method",
@@ -289,8 +290,8 @@ def cdc_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             "resident_after",
             "erasure_complete",
             "late_writes_suppressed",
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 

@@ -25,6 +25,11 @@ from lets_talk_cdc_change_feed_playground_spark.functions.sequence import (
 )
 
 
+def sort_lanes(summary: DataFrame, *cols: str) -> DataFrame:
+    """Final sort of a lane-keyed summary (at most lanes x ops rows): one
+    partition sorted in place, so no range-partition sample job runs."""
+    return summary.coalesce(1).sortWithinPartitions(*cols)
+
 
 def normalize_lanes(log: DataFrame, polling: DataFrame, trigger: DataFrame) -> DataFrame:
     """Union the three capture outputs into one (method, op, pk, ts_ms,
@@ -93,7 +98,7 @@ def lane_metrics(lanes: DataFrame, hist: DataFrame | None = None) -> DataFrame:
         pct = grouped_exact_percentiles(
             with_lag, ["method"], "lag_ms", {0.5: "__p50", 0.95: "__p95"}
         )
-    return (
+    return sort_lanes(
         counters.join(F.broadcast(pct), "method", "left")
         .select(
             "method",
@@ -106,8 +111,8 @@ def lane_metrics(lanes: DataFrame, hist: DataFrame | None = None) -> DataFrame:
             F.round("__p50", 3).alias("lag_ms_p50"),
             F.round("__p95", 3).alias("lag_ms_p95"),
             "lag_ms_max",
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 
@@ -151,15 +156,15 @@ def recent_lag_metrics(
         F.col("__rn") <= window_size
     )
     lag = (F.col("emitted_at_ms") - F.col("commit_ts_ms")).cast("double")
-    return (
+    return sort_lanes(
         recent.withColumn("lag_ms", lag)
         .groupBy("method")
         .agg(
             F.count(F.lit(1)).alias("n_samples"),
             F.round(F.expr("percentile(lag_ms, 0.5)"), 3).alias("lag_ms_p50"),
             F.round(F.expr("percentile(lag_ms, 0.95)"), 3).alias("lag_ms_p95"),
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 
@@ -183,15 +188,15 @@ def missed_deletes(
             ).alias("captured_deletes")
         )
     )
-    return (
+    return sort_lanes(
         captured.crossJoin(F.broadcast(src))
         .select(
             "method",
             "source_deletes",
             "captured_deletes",
             (F.col("source_deletes") - F.col("captured_deletes")).alias("missed_deletes"),
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 
@@ -214,7 +219,7 @@ def write_amplification(
             ).alias("extra_writes")
         )
     )
-    return (
+    return sort_lanes(
         extra.crossJoin(F.broadcast(n_ops))
         .select(
             "method",
@@ -226,8 +231,8 @@ def write_amplification(
                 F.expr("((source_writes + extra_writes) * 10000) div source_writes")
                 / 10000.0
             ).alias("write_amplification"),
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 
@@ -299,10 +304,11 @@ def event_stats(lanes: DataFrame, hist: DataFrame | None = None) -> DataFrame:
             F.sum("__n").alias("n"), F.max("__max_ts").alias("last_ts_ms")
         )
     )
-    return (
+    return sort_lanes(
         per_op.withColumn("lane_total", F.sum("n").over(w))
-        .withColumn("share", F.expr("(n * 10000) div lane_total") / 10000.0)
-        .orderBy("method", "op")
+        .withColumn("share", F.expr("(n * 10000) div lane_total") / 10000.0),
+        "method",
+        "op",
     )
 
 

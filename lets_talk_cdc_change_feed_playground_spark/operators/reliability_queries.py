@@ -45,7 +45,10 @@ from lets_talk_cdc_change_feed_playground_spark.operators.cdc_queries import (
     WAL_SQL,
     _with,
 )
-from lets_talk_cdc_change_feed_playground_spark.operators.metrics import normalize_lanes
+from lets_talk_cdc_change_feed_playground_spark.operators.metrics import (
+    normalize_lanes,
+    sort_lanes,
+)
 from lets_talk_cdc_change_feed_playground_spark.operators.ops_feed import (
     OPS_SQL,
     hash31,
@@ -296,7 +299,7 @@ def cdc_heartbeat_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gap_ms",
         F.col("emitted_at_ms") - F.lag("emitted_at_ms").over(wlane),
     )
-    return (
+    return sort_lanes(
         gaps.groupBy("method")
         .agg(
             F.sum("n_events").alias("n_events"),
@@ -317,8 +320,8 @@ def cdc_heartbeat_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_emit_ms",
             "end_silence_ms",
             "stale_at_end",
-        )
-        .orderBy("method")
+        ),
+        "method",
     )
 
 

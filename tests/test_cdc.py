@@ -8,6 +8,8 @@ bounds, and per-lane lag bounds tied to the tick intervals.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -154,6 +156,66 @@ def test_verdict(spark, sf_dir):
     assert rows["trigger"]["pass"]
     assert not rows["polling"]["pass"] and rows["polling"]["missing"] > 0
     assert rows["polling"]["extra"] == 0
+
+
+def _inversion_diff():
+    """A hand-built ~40-row lane diff: 30 matched pairs whose actual order
+    swaps expected indexes up to 6 apart (so inversions straddle the edges
+    of 4-row buckets), 5 extra rows (NULL ``expected_idx``) interleaved
+    with them, and 5 missing rows (NULL ``actual_idx``) whose expected
+    indexes exceed every matched one."""
+    rng = random.Random(12)
+    order = list(range(30))
+    for _ in range(10):
+        i = rng.randrange(len(order) - 6)
+        j = i + rng.randrange(1, 7)
+        order[i], order[j] = order[j], order[i]
+    seq = list(order)
+    for _ in range(5):
+        seq.insert(rng.randrange(len(seq) + 1), None)
+    rows = [
+        (f"k{a}", "matched" if e is not None else "extra", e, a)
+        for a, e in enumerate(seq)
+    ]
+    rows += [(f"m{e}", "missing", e, None) for e in range(30, 35)]
+    return rows
+
+
+def _running_max_flags(rows, bucket_size=None):
+    """Brute-force V2 in actual order; with ``bucket_size`` the running max
+    restarts at each bucket edge (what the flag would be without the
+    cross-bucket prefix)."""
+    flags, run, bucket = {}, -1, None
+    for key, status, e, a in sorted((r for r in rows if r[3] is not None), key=lambda r: r[3]):
+        if bucket_size is not None and a // bucket_size != bucket:
+            run, bucket = -1, a // bucket_size
+        if status == "matched":
+            flags[key] = e < run
+            run = max(run, e)
+    return {r[0]: flags.get(r[0], False) for r in rows}
+
+
+def test_mark_inversions_across_buckets(spark):
+    """The two-phase running max (per-bucket window plus broadcast prefix of
+    bucket maxima) flags exactly what a single running max in actual order
+    flags, with inversions that only the cross-bucket prefix can see."""
+    rows = _inversion_diff()
+    diff = spark.createDataFrame(
+        rows, "key string, status string, expected_idx long, actual_idx long"
+    )
+    want = _running_max_flags(rows)
+    in_bucket = _running_max_flags(rows, bucket_size=4)
+    assert {k for k, v in want.items() if v and not in_bucket[k]}, (
+        "no inversion straddles a bucket edge: the prefix goes unchecked"
+    )
+    for bucket_size in (4, 1 << 30):
+        got = {
+            r["key"]: r["inverted"]
+            for r in diffs.mark_inversions(diff, bucket_size=bucket_size).collect()
+        }
+        assert got == want, bucket_size
+    n = diffs.ordering_inversions(diff, bucket_size=4).first()["ordering_issues"]
+    assert n == sum(want.values())
 
 
 def test_replay_state_matches_source_fold(spark, sf_dir, ops):

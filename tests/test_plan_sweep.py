@@ -180,3 +180,41 @@ def test_allpairs_verify_plan_invariants(spark, sf_dir):
         "scan as InMemoryTableScan; localCheckpointed ones as Scan ExistingRDD, "
         "which cannot recompute at all)"
     )
+
+
+def _operators(node):
+    """One-line descriptions of a physical plan's own operators, descending
+    through adaptive plans and query stages but not into cached relations
+    (their build plans run once per session, not per call)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _operators(node.executedPlan())
+        return
+    yield node.simpleString(100)
+    if "QueryStage" in node.nodeName():
+        yield from _operators(node.plan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _operators(children.apply(i))
+
+
+def test_warm_verdict_is_one_aggregate(spark, sf_dir):
+    """Each lane diff is staged with its rows' inversion flag, so a warm
+    ``cdc_verdict`` starts no Spark job while it builds and runs one
+    aggregate: no window, no broadcast join (the old prefix fold) and no
+    range-partition sample job for its at most three output rows."""
+    sc = spark.sparkContext
+    fn = entry.queries()["cdc_verdict"]
+    fn(spark, sf_dir).collect()  # stages the lanes and their diffs
+    try:
+        sc.setJobGroup("warm_verdict_build", "cdc_verdict")
+        df = fn(spark, sf_dir)
+        sc.setJobGroup("warm_verdict_exec", "cdc_verdict")
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup("warm_verdict_build")) == []
+    assert len(tracker.getJobIdsForGroup("warm_verdict_exec")) <= 2
+    ops = list(_operators(df._jdf.queryExecution().executedPlan()))
+    for banned in ("Window", "BroadcastHashJoin", "rangepartitioning"):
+        assert not [o for o in ops if banned in o], (banned, ops)

@@ -126,10 +126,9 @@ def main() -> int:
             "R-versions validity pass) — two small shuffles + one action"
         ),
         "cdc_verdict": (
-            "three-lane diff verdict, fused (r8): phase-1 per-bucket maxima "
-            "(collected, the two-phase envelope) + ONE window pass where "
-            "every aggregate reduces in a single groupBy(lane) — two jobs "
-            "over the staged lane diffs"
+            "three-lane diff verdict: ONE groupBy(lane) over the staged lane "
+            "diffs, whose rows carry the inversion flag computed where each "
+            "diff is staged — two jobs, no driver collect"
         ),
         "cdc_value_coercion": (
             "row-local canonical-form coercion (regex num/trim/map compare) "

@@ -48,7 +48,7 @@ AUDITED = [
     ("cdc_gdpr_erasure", "request set broadcast into one feed pass; three capture folds on per-pk shuffles"),
     ("lineitem_zorder_plan", "value-range file assignment — pure projection + per-file aggregate, zero global ranks"),
     ("orders_dq_scorecard", "each rule one map-side-combinable scan; FK anti-join AQE-planned (customer scales with SF)"),
-    ("cdc_verdict", "fused r8 form: one (lane, bucket) window pass with every verdict aggregate in a single groupBy(lane); phase-1 bucket maxima precomputed (two-phase envelope)"),
+    ("cdc_verdict", "one groupBy(lane) over the staged lane diffs, whose rows carry the two-phase inversion flag; single-partition sort of <= 3 rows, no window or broadcast per call"),
     ("cdc_ivm_join", "fused r8 form: dim-side deltas are driver literals (bounded epochs x types); one conditional aggregation per staged fact frame, validity ranges as broadcast probes"),
     ("docs_dsir_weights", "Arrow token->bucket kernel + numpy take over the memoized 256-entry weight table; one 256-group map-side count, zero extra shuffles"),
     ("emb_semantic_dedup", "Arrow assignment kernel (driver-held centroid block) + per-cell applyInPandas pair kernel — pair work bounded per cell, never corpus²"),
